@@ -21,26 +21,23 @@ _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO_DIR)
 
 from isen_projet_bigdata_a3s6_spark import queries as _registry  # noqa: E402
+from isen_projet_bigdata_a3s6_spark.session import apply_session_contract  # noqa: E402
 
 _PKG_SHIPPED: set[str] = set()
 
 
 def _ensure_pkg_on_workers(spark: SparkSession) -> None:
-    """Python workers spawn with the driver JVM's original sys.path — when
-    the driver runs outside the repo dir, pandas-UDF closures referencing
-    this package fail to unpickle. Shipping the package as a zip via
-    addPyFile fixes every UDF path (geo, multimodal) in any session."""
-    # timestamps from the nanos-parquet reader are session-tz LTZ; DuckDB's
-    # are UTC-naive — a non-UTC driver session would shift event-time
-    # windows. Pin UTC for every contract query.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # testdata timestamps are TIMESTAMP(MICROS, isAdjustedToUTC=false);
-    # read as UTC instants (not TIMESTAMP_NTZ) so watermarks/windows work
-    # and calendar fields match DuckDB's naive reading.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    """Once per application: apply the engine's session contract
+    (``session.SESSION_CONTRACT``: UTC, no TIMESTAMP_NTZ inference, nanos
+    parquet as long) to the host's session, and ship the package to the
+    Python workers. Workers spawn with the driver JVM's original sys.path —
+    when the driver runs outside the repo dir, pandas-UDF closures
+    referencing this package fail to unpickle. Shipping the package as a zip
+    via addPyFile fixes every UDF path (geo, multimodal) in any session."""
     key = spark.sparkContext.applicationId
     if key in _PKG_SHIPPED:
         return
+    apply_session_contract(spark)
     import tempfile
     import zipfile
 

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import euclidean_distance
+from ..sources.readers import footer_row_bound
 
 
 def decorate_with_group_agg(
@@ -317,6 +318,15 @@ def knn_join_1nn_grid_exact(
     return out
 
 
+def _row_bound(df: DataFrame) -> int:
+    """Rows of ``df``, or an upper bound on them from parquet footers when
+    its plan allows one (no Spark job; see ``footer_row_bound``). A 1-NN
+    dispatch may use the bound: a loose one can only send an input down the
+    grid path, and both paths are exact."""
+    n = footer_row_bound(df)
+    return df.count() if n is None else n
+
+
 def knn_join_1nn_auto(
     probes: DataFrame,
     known: DataFrame,
@@ -343,21 +353,24 @@ def knn_join_1nn_auto(
     """
     import math
 
-    n_known = known.count()
-    n_probes = probes.count()
+    n_known = _row_bound(known)
+    n_probes = _row_bound(probes)
+    small = n_probes * n_known <= work_threshold
+    kx, ky = known_coords
+    s = None if small else known.agg(
+        F.min(kx).alias("x0"), F.max(kx).alias("x1"),
+        F.min(ky).alias("y0"), F.max(ky).alias("y1"),
+    ).first()
     # empty known side: no probe has a nearest neighbor — the small-path
     # broadcast join below degenerates to an empty (schema-correct) result,
-    # which is the empty-in/empty-out behavior a scheduled pipeline needs
-    if n_probes * n_known <= work_threshold:
+    # which is the empty-in/empty-out behavior a scheduled pipeline needs.
+    # The second test catches a footer bound over a known side its filter
+    # emptied.
+    if small or s["x0"] is None or s["y0"] is None:
         return knn_join_1nn(
             probes, known, probe_id, probe_coords, known_coords,
             payload_cols=payload_cols, tiebreak=tiebreak,
         )
-    kx, ky = known_coords
-    s = known.agg(
-        F.min(kx).alias("x0"), F.max(kx).alias("x1"),
-        F.min(ky).alias("y0"), F.max(ky).alias("y1"),
-    ).first()
     ex = float(s["x1"]) - float(s["x0"])
     ey = float(s["y1"]) - float(s["y0"])
     if ex > 0 and ey > 0:
@@ -646,19 +659,21 @@ def haversine_knn_1nn_auto(
     cell-size guess never affects exactness — only the round count."""
     import math
 
-    n_known = known.count()
-    n_probes = probes.count()
-    if n_probes * n_known <= work_threshold:
+    n_known = _row_bound(known)
+    n_probes = _row_bound(probes)
+    small = n_probes * n_known <= work_threshold
+    klat, klon = known_latlon
+    s = None if small else known.agg(
+        F.min(klat).alias("y0"), F.max(klat).alias("y1"),
+        F.min(klon).alias("x0"), F.max(klon).alias("x1"),
+    ).first()
+    # the second test: a footer bound over a known side its filter emptied
+    if small or s["x0"] is None or s["y0"] is None:
         return haversine_knn_1nn(
             probes, known, probe_id, probe_latlon, known_latlon,
             payload_cols=payload_cols, dist_col=dist_col,
             tiebreak=tiebreak, round_to=round_to,
         )
-    klat, klon = known_latlon
-    s = known.agg(
-        F.min(klat).alias("y0"), F.max(klat).alias("y1"),
-        F.min(klon).alias("x0"), F.max(klon).alias("x1"),
-    ).first()
     ey = float(s["y1"]) - float(s["y0"])
     ex = float(s["x1"]) - float(s["x0"])
     if ex > 0 and ey > 0:

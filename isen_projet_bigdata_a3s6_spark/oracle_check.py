@@ -15,6 +15,7 @@ from dataclasses import dataclass, field
 import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 from .sources.readers import TABLES
 
@@ -181,8 +182,18 @@ def retarget_oracle_sql(sql: str, sf_dir: str) -> str:
 def check_query(spark: SparkSession, name: str, sf_dir: str) -> CompareResult:
     from .queries import oracle_sql, queries
 
-    fn = queries()[name]
-    spark_pdf = fn(spark, sf_dir).toPandas()
+    df = queries()[name](spark, sf_dir)
+    # the value hash stringifies cells and cannot canonicalize array, map
+    # or struct cells, so every registered query must emit scalars only
+    nested = [
+        f.name for f in df.schema.fields
+        if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
+    ]
+    if nested:
+        res = CompareResult(name, False, -1, -1)
+        res.mismatches.append(f"non-scalar columns {nested}: the value hash cannot canonicalize them")
+        return res
+    spark_pdf = df.toPandas()
     sql = oracle_sql().get(name)
     if sql is None:
         ok = len(spark_pdf) >= 0

@@ -2358,19 +2358,12 @@ def q70_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q71_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from .sources.readers import read_parquet_ns_safe
+    from .sources.readers import read_stream_ns_safe
 
     path = os.path.join(sf_dir, "events.parquet")
-    batch = read_parquet_ns_safe(spark, path)
-    raw_schema = spark.read.parquet(path).schema
     stage_dir = _scratch_dir(spark, "stream_slide")
     stage_parquet_files(path, stage_dir)
-    stream = spark.readStream.schema(raw_schema).parquet(stage_dir)
-    for f in batch.schema.fields:
-        if str(raw_schema[f.name].dataType) != str(f.dataType):
-            stream = stream.withColumn(
-                f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
-            )
+    stream = read_stream_ns_safe(spark, path, stage_dir)
     from .functions.scalar import dec_sum
 
     agg = (
@@ -9113,19 +9106,12 @@ def q217_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from .functions.scalar import dec_sum
-    from .sources.readers import read_parquet_ns_safe
+    from .sources.readers import read_stream_ns_safe
 
     path = os.path.join(sf_dir, "events.parquet")
-    batch = read_parquet_ns_safe(spark, path)
-    raw_schema = spark.read.parquet(path).schema
     stage_dir = _scratch_dir(spark, "stream_static")
     stage_parquet_files(path, stage_dir)
-    stream = spark.readStream.schema(raw_schema).parquet(stage_dir)
-    for f in batch.schema.fields:
-        if str(raw_schema[f.name].dataType) != str(f.dataType):
-            stream = stream.withColumn(
-                f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
-            )
+    stream = read_stream_ns_safe(spark, path, stage_dir)
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment").alias("segment")
     )
@@ -13095,7 +13081,7 @@ def q271_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ``_metadata.file_path`` is constant-folded per split —
     no UDF, no extra scan; the audit is one groupBy over |files|
     groups."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select(
             F.regexp_extract(F.col("_metadata.file_path"), r"([^/]+)$", 1).alias(

@@ -1,4 +1,4 @@
-from .readers import TABLES, load_table, load_tables, read_csv, read_parquet
+from .readers import TABLES, load_table, load_tables, read_csv, read_parquet_ns_safe
 from .writers import write_csv, write_parquet
 
 __all__ = [
@@ -6,7 +6,7 @@ __all__ = [
     "load_table",
     "load_tables",
     "read_csv",
-    "read_parquet",
+    "read_parquet_ns_safe",
     "write_csv",
     "write_parquet",
 ]

@@ -27,19 +27,11 @@ from ..scratch import scratch_dir, stage_parquet_files
 def _staged_stream(spark: SparkSession, parquet_path: str, prefix: str):
     """File-source stream over a single parquet file, with the batch reader's
     nanos→timestamp conversion applied (same trick as streaming.windows)."""
-    from ..sources.readers import read_parquet_ns_safe
+    from ..sources.readers import read_stream_ns_safe
 
-    batch = read_parquet_ns_safe(spark, parquet_path)
-    raw_schema = spark.read.parquet(parquet_path).schema
     stage = scratch_dir(spark, prefix.rstrip("_"))
     stage_parquet_files(parquet_path, stage)
-    stream = spark.readStream.schema(raw_schema).parquet(stage)
-    for f in batch.schema.fields:
-        if str(raw_schema[f.name].dataType) != str(f.dataType):
-            stream = stream.withColumn(
-                f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
-            )
-    return stream
+    return read_stream_ns_safe(spark, parquet_path, stage)
 
 
 def stream_stream_time_bounded_join(

@@ -57,21 +57,11 @@ def streaming_user_profiles(
     """Run the stateful profile operator as a real stream over the events
     parquet (one file per micro-batch via maxFilesPerTrigger), returning the
     final materialized state. Update-mode output: last row per user wins."""
-    import os
-    import tempfile
+    from ..sources.readers import read_stream_ns_safe
 
-    from ..sources.readers import read_parquet_ns_safe
-
-    batch = read_parquet_ns_safe(spark, parquet_path)
-    raw_schema = spark.read.parquet(parquet_path).schema
     stage = scratch_dir(spark, "stateful_src")
     stage_parquet_files(parquet_path, stage)
-    stream = spark.readStream.schema(raw_schema).option("maxFilesPerTrigger", 1).parquet(stage)
-    for f in batch.schema.fields:
-        if str(raw_schema[f.name].dataType) != str(f.dataType):
-            stream = stream.withColumn(
-                f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
-            )
+    stream = read_stream_ns_safe(spark, parquet_path, stage, maxFilesPerTrigger=1)
     profiles = (
         stream.select("user_id", "ts", "value")
         .groupBy("user_id")
@@ -168,21 +158,11 @@ def streaming_rate_limit(
     of expensive per-document processing. State per key is a single counter;
     keys stop mutating one watermark past their hour (timeout would prune
     them in a long-lived job)."""
-    import os
-    import tempfile
+    from ..sources.readers import read_stream_ns_safe
 
-    from ..sources.readers import read_parquet_ns_safe
-
-    batch = read_parquet_ns_safe(spark, parquet_path)
-    raw_schema = spark.read.parquet(parquet_path).schema
     stage = scratch_dir(spark, "ratelimit_src")
     stage_parquet_files(parquet_path, stage)
-    stream = spark.readStream.schema(raw_schema).parquet(stage)
-    for f in batch.schema.fields:
-        if str(raw_schema[f.name].dataType) != str(f.dataType):
-            stream = stream.withColumn(
-                f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
-            )
+    stream = read_stream_ns_safe(spark, parquet_path, stage)
     limited = (
         stream.select(
             "user_id", F.date_trunc("hour", "ts").alias("hour"), "event_id", "ts"

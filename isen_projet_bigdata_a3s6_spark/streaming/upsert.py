@@ -63,27 +63,15 @@ def streaming_latest_state(
     from ..sources.readers import read_parquet_ns_safe
 
     batch = read_parquet_ns_safe(spark, parquet_path)
-    raw_schema = spark.read.parquet(parquet_path).schema
 
     # stage the source as several files so the stream runs several batches
     stage = scratch_dir(spark, "upsert_src")
-    spark.read.parquet(parquet_path).repartition(n_source_files).write.mode(
-        "overwrite"
-    ).parquet(stage)
+    batch.repartition(n_source_files).write.mode("overwrite").parquet(stage)
 
     store = scratch_dir(spark, "upsert_state") + "/state"
     ckpt = scratch_dir(spark, "upsert_ckpt")
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    for f in batch.schema.fields:
-        if str(raw_schema[f.name].dataType) != str(f.dataType):
-            stream = stream.withColumn(
-                f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
-            )
+    stream = spark.readStream.schema(batch.schema).option("maxFilesPerTrigger", 1).parquet(stage)
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         incoming = latest_per_key(batch_df, key, ts)

@@ -88,30 +88,12 @@ def streaming_tumbling_counts(
     the parquet file (file source), drain it synchronously into a memory
     sink, and return the materialized result — identical semantics to the
     batch form, so it shares its DuckDB oracle."""
-    from ..sources.readers import read_parquet_ns_safe
-
-    # batch read resolves the schema (incl. nanos-timestamp handling)
-    batch = read_parquet_ns_safe(spark, parquet_path)
-    raw_schema = spark.read.parquet(parquet_path).schema
-    import os
-    import tempfile
+    from ..sources.readers import read_stream_ns_safe
 
     # FileStreamSource wants a directory; stage the single file via symlink
     stage_dir = scratch_dir(spark, "stream_src")
     stage_parquet_files(parquet_path, stage_dir)
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
-    # apply the same ns→timestamp conversion the batch reader applied
-    for f in batch.schema.fields:
-        if f.name in [rf.name for rf in raw_schema.fields] and str(
-            raw_schema[f.name].dataType
-        ) != str(f.dataType):
-            stream = stream.withColumn(
-                f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
-            )
+    stream = read_stream_ns_safe(spark, parquet_path, stage_dir, maxFilesPerTrigger=1)
     agg = (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(ts_col, duration).alias("w"), *keys)
@@ -196,21 +178,11 @@ def streaming_session_windows(
     ``last_event + gap``). Append mode emits each closed session exactly
     once; sessions still open at the final watermark are not emitted — the
     oracle encodes that cutoff with a HAVING, same technique as q95/q96."""
-    import os
-    import tempfile
+    from ..sources.readers import read_stream_ns_safe
 
-    from ..sources.readers import read_parquet_ns_safe
-
-    batch = read_parquet_ns_safe(spark, parquet_path)
-    raw_schema = spark.read.parquet(parquet_path).schema
     stage = scratch_dir(spark, "stream_sess_src")
     stage_parquet_files(parquet_path, stage)
-    stream = spark.readStream.schema(raw_schema).parquet(stage)
-    for f in batch.schema.fields:
-        if str(raw_schema[f.name].dataType) != str(f.dataType):
-            stream = stream.withColumn(
-                f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
-            )
+    stream = read_stream_ns_safe(spark, parquet_path, stage)
     agg = (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.session_window(ts_col, gap).alias("w"), *keys)
@@ -248,22 +220,11 @@ def _stage_stream(
     deployment — caught by the sf1 upscale smoke, where a directory table
     streamed zero files because the source does not recurse through a
     symlinked dir) has each part-file symlinked in individually."""
-    import os
-    import tempfile
+    from ..sources.readers import read_stream_ns_safe
 
-    from ..sources.readers import read_parquet_ns_safe
-
-    batch = read_parquet_ns_safe(spark, parquet_path)
-    raw_schema = spark.read.parquet(parquet_path).schema
     stage = scratch_dir(spark, prefix.rstrip("_"))
     stage_parquet_files(parquet_path, stage)
-    stream = spark.readStream.schema(raw_schema).parquet(stage)
-    for f in batch.schema.fields:
-        if str(raw_schema[f.name].dataType) != str(f.dataType):
-            stream = stream.withColumn(
-                f.name, F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
-            )
-    return stream
+    return read_stream_ns_safe(spark, parquet_path, stage)
 
 
 def streaming_dedup_counts(

@@ -1,5 +1,6 @@
 """Join operators: 1-NN broadcast vs grid-bucketed parity, as-of join."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from isen_projet_bigdata_a3s6_spark.operators.joins import (
@@ -185,3 +186,60 @@ def test_bucketed_join_eliminates_shuffle(spark, sf_dir):
     assert "Exchange hashpartitioning" not in below
     # exactly one exchange overall (the final aggregation)
     assert plan.count("Exchange hashpartitioning") == 1
+
+
+@pytest.mark.parametrize("empty_known", [False, True])
+@pytest.mark.parametrize("threshold", [10**9, 0], ids=["broadcast", "grid"])
+@pytest.mark.parametrize("planar", [True, False], ids=["planar", "haversine"])
+def test_knn_footer_bound_dispatch_matches_count(spark, tmp_path, planar, threshold, empty_known):
+    """The 1-NN dispatch sizes parquet scans from footer row counts (no job)
+    and anything else with count(): both inputs give the same rows on both
+    branches, also when a filter empties the known side under a footer
+    bound that still counts its file's rows."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from isen_projet_bigdata_a3s6_spark.operators.joins import (
+        haversine_knn_1nn_auto,
+        knn_join_1nn_auto,
+    )
+    from isen_projet_bigdata_a3s6_spark.sources.readers import (
+        footer_row_bound,
+        read_parquet_ns_safe,
+    )
+
+    rnd = random.Random(7)
+    pq.write_table(pa.table({
+        "pid": list(range(60)),
+        "px": [rnd.uniform(-5, 5) for _ in range(60)],
+        "py": [rnd.uniform(40, 50) for _ in range(60)],
+    }), str(tmp_path / "p.parquet"))
+    pq.write_table(pa.table({
+        "kid": list(range(20)),
+        "kx": [round(rnd.uniform(-5, 5), 1) for _ in range(20)],
+        "ky": [round(rnd.uniform(40, 50), 1) for _ in range(20)],
+    }), str(tmp_path / "k.parquet"))
+    probes = read_parquet_ns_safe(spark, str(tmp_path / "p.parquet"))
+    known = read_parquet_ns_safe(spark, str(tmp_path / "k.parquet"))
+    if empty_known:
+        known = known.filter(F.col("kx") > 1e9)
+    assert (footer_row_bound(probes), footer_row_bound(known)) == (60, 20)
+    # the same rows with plans no footer bounds: the count() path
+    probes_c = spark.createDataFrame(probes.collect(), probes.schema)
+    known_c = spark.createDataFrame(known.collect(), known.schema)
+    assert footer_row_bound(probes_c) is None and footer_row_bound(known_c) is None
+
+    def run(p, k):
+        if planar:
+            out = knn_join_1nn_auto(p, k, "pid", ("px", "py"), ("kx", "ky"), ["kid"],
+                                    tiebreak="kid", work_threshold=threshold)
+        else:
+            out = haversine_knn_1nn_auto(p, k, "pid", ("py", "px"), ("ky", "kx"), ["kid"],
+                                         tiebreak="kid", work_threshold=threshold)
+        return sorted((r["pid"], r["kid"]) for r in out.collect())
+
+    got = run(probes, known)
+    assert got == run(probes_c, known_c)
+    assert len(got) == (0 if empty_known else 60)

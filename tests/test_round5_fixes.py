@@ -218,31 +218,6 @@ def test_rank_shape_queries_have_no_single_reducer_window(spark):
         assert not bad, f"{name}: unpartitioned window:\n" + "\n".join(bad)
 
 
-def test_all_registered_queries_emit_scalar_columns_only(spark):
-    """The driver's canonicalizer cannot hash array/map/struct cells
-    (r03 q133, r04 q187): EVERY registered query must emit scalars only.
-    Schema-only check — no execution, so the full 300-query sweep stays
-    cheap."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    from isen_projet_bigdata_a3s6_spark.queries import queries
-
-    offenders = {}
-    for name, fn in queries().items():
-        try:
-            schema = fn(spark, "/root/testdata/sf0.001").schema
-        except Exception:
-            continue  # build errors are the oracle sweep's concern
-        bad = [
-            f.name
-            for f in schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType, StructType))
-        ]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, offenders
-
-
 def test_hand_routed_dimension_slices_broadcast_at_scale(spark, sf_dir):
     """The broadcast audit's two contracts, pinned in the 100 TB regime
     (auto-broadcast disabled):

@@ -1,6 +1,9 @@
-"""Source operators: binary scan (S3), CSV round-trip (S1/S2), ns-parquet."""
+"""Source operators: binary scan (S3), CSV round-trip (S1/S2), ns-parquet,
+and the reader cache."""
 
 import os
+
+import pytest
 
 from isen_projet_bigdata_a3s6_spark.sources.readers import (
     load_table,
@@ -133,3 +136,169 @@ def test_write_zordered_range_guard(spark, tmp_path):
     df = spark.createDataFrame([(1, 1 << 10)], "a int, b int")
     with pytest.raises(ValueError):
         write_zordered(df, str(tmp_path / "z"), "a", "b", bits=8)
+
+
+# --- the reader cache: schema inferred once per (file identity, confs) ------
+
+
+def _write(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), path)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Spark jobs ``fn`` launches, seen through the status tracker of a job
+    group set before it runs and read back after it."""
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup(group))
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return set(sc.statusTracker().getJobIdsForGroup(group)) - before, out
+
+
+@pytest.mark.parametrize("same_size", [False, True])
+def test_rewritten_file_serves_new_schema(spark, tmp_path, same_size):
+    p = str(tmp_path / "t.parquet")
+    _write(p, a=[1, 2, 3])
+    assert read_parquet_ns_safe(spark, p).columns == ["a"]
+    st = os.stat(p)
+    if same_size:
+        # same size, same inode, same mtime: only the footer tells them apart
+        _write(p, b=[1, 2, 3])
+        os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
+        st2 = os.stat(p)
+        assert (st2.st_size, st2.st_ino, st2.st_mtime_ns) == (st.st_size, st.st_ino, st.st_mtime_ns)
+        want_cols, want = ["b"], [(1,), (2,), (3,)]
+    else:
+        _write(p, b=[1, 2, 3], c=["x", "y", "z"])
+        assert os.stat(p).st_size != st.st_size
+        want_cols, want = ["b", "c"], [(1, "x"), (2, "y"), (3, "z")]
+    back = read_parquet_ns_safe(spark, p)
+    assert back.columns == want_cols
+    assert sorted(map(tuple, back.collect())) == want
+
+
+def test_flipped_schema_confs_are_not_served_stale(spark, tmp_path):
+    import datetime as dt
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    bin_path = str(tmp_path / "bin.parquet")
+    _write(bin_path, k=[1], blob=pa.array([b"hi"], pa.binary()))
+    ns_path = str(tmp_path / "ns.parquet")
+    _write(ns_path, ts=pa.array([dt.datetime(2024, 1, 1, 0, 0, 1)], pa.timestamp("ns")))
+    assert isinstance(read_parquet_ns_safe(spark, bin_path).schema["blob"].dataType, T.BinaryType)
+    assert dict(read_parquet_ns_safe(spark, ns_path).dtypes)["ts"] == "timestamp"
+    try:
+        spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+        assert isinstance(read_parquet_ns_safe(spark, bin_path).schema["blob"].dataType, T.StringType)
+        # without nanos-as-long a cached long schema must not be reused
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+        with pytest.raises(ValueError, match="nanosAsLong"):
+            read_parquet_ns_safe(spark, ns_path)
+    finally:
+        spark.conf.set("spark.sql.parquet.binaryAsString", "false")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    assert isinstance(read_parquet_ns_safe(spark, bin_path).schema["blob"].dataType, T.BinaryType)
+
+
+def test_events_ts_matches_duckdb(spark, sf_dir):
+    """events.ts is TIMESTAMP(NANOS): the reader's exact ``div 1000`` gives
+    the microseconds DuckDB reads from the same file."""
+    import duckdb
+
+    from pyspark.sql import functions as F
+
+    path = os.path.join(sf_dir, "events.parquet")
+    got = {
+        (r[0], r[1])
+        for r in load_table(spark, sf_dir, "events")
+        .select("event_id", F.unix_micros("ts"))
+        .collect()
+    }
+    want = set(
+        duckdb.connect()
+        .execute(f"SELECT event_id, epoch_us(ts) FROM read_parquet('{path}')")
+        .fetchall()
+    )
+    assert got == want and len(got) > 0
+
+
+def test_warm_load_table_runs_no_job(spark, sf_dir, tmp_path):
+    cold = str(tmp_path / "cold.parquet")
+    _write(cold, a=[1, 2])
+    jobs, _ = _jobs_in_group(spark, "reader-cold", lambda: read_parquet_ns_safe(spark, cold))
+    assert jobs, "a cold read infers the schema with a job; the check must see it"
+    for name in ("orders", "events"):
+        load_table(spark, sf_dir, name)
+    jobs, dfs = _jobs_in_group(
+        spark, "reader-warm",
+        lambda: [load_table(spark, sf_dir, n) for n in ("orders", "events")],
+    )
+    assert jobs == set()
+    assert dict(dfs[1].dtypes)["ts"] == "timestamp"
+
+
+def test_reader_cache_stays_bounded(spark, tmp_path, monkeypatch):
+    from isen_projet_bigdata_a3s6_spark.sources import readers
+
+    monkeypatch.setattr(readers, "META_CACHE_FILES", 3)
+    paths = [str(tmp_path / f"f{i}.parquet") for i in range(6)]
+    for i, p in enumerate(paths):
+        _write(p, a=[i])
+        assert read_parquet_ns_safe(spark, p).collect()[0]["a"] == i
+        assert len(readers._META_CACHE) <= 3
+    assert paths[-1] in readers._META_CACHE and paths[0] not in readers._META_CACHE
+
+
+def test_reader_cache_threads_keep_it_bounded(tmp_path, monkeypatch):
+    """Eight threads hit a three-file cache with four files: no lost update
+    (a KeyError from an entry evicted under another thread) and the bound
+    holds. Spark is replaced by a stub: only the cache is under test."""
+    import sys
+    import threading
+    from types import SimpleNamespace
+
+    from pyspark.sql import types as T
+
+    from isen_projet_bigdata_a3s6_spark.sources import readers
+
+    monkeypatch.setattr(readers, "META_CACHE_FILES", 3)
+    stub = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda k: "true"),
+        read=SimpleNamespace(parquet=lambda p: SimpleNamespace(schema=T.StructType())),
+    )
+    paths = []
+    for i in range(4):
+        paths.append(str(tmp_path / f"t{i}.parquet"))
+        _write(paths[-1], a=list(range(i + 1)))
+    errors = []
+
+    def work(k):
+        try:
+            for j in range(500):
+                i = (k + j) % 4
+                assert readers._parquet_meta(stub, paths[i]).num_rows == i + 1
+        except Exception as e:  # reported by the main thread
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(readers._META_CACHE) <= 3
