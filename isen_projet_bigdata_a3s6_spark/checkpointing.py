@@ -11,8 +11,9 @@ plan nests unboundedly. Two modes:
   set): blocks go to the checkpoint directory (HDFS/object store on a
   cluster) and survive executor loss — the 100 TB posture.
 
-Enable the reliable path by calling :func:`ensure_checkpoint_dir` (or
-setting ``SPARK_GRAFT_CHECKPOINT_DIR``) before running iterative operators.
+Enable the reliable path by calling :func:`ensure_checkpoint_dir` before
+running iterative operators (with no ``path`` it reads
+``SPARK_GRAFT_CHECKPOINT_DIR``).
 """
 
 from __future__ import annotations
@@ -40,24 +41,10 @@ def ensure_checkpoint_dir(spark: SparkSession, path: str | None = None) -> bool:
     return False
 
 
-def cut_lineage(df: DataFrame, reliable: bool | None = None) -> DataFrame:
-    """Materialize ``df`` eagerly and cut its lineage.
-
-    ``reliable=None`` (default): reliable ``checkpoint()`` iff a checkpoint
-    dir is configured, else ``localCheckpoint``. ``reliable=True``: require
-    the reliable path (raises if no checkpoint dir is set — the caller asked
-    for fault tolerance it can't have). ``reliable=False``: force local.
-    """
-    spark = df.sparkSession
-    has_dir = reliable_checkpoint_enabled(spark)
-    if reliable is None:
-        reliable = has_dir
-    if reliable:
-        if not has_dir:
-            raise RuntimeError(
-                "reliable checkpointing requested but no checkpoint dir is "
-                "configured — call ensure_checkpoint_dir(spark, path) or set "
-                "SPARK_GRAFT_CHECKPOINT_DIR"
-            )
+def cut_lineage(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` eagerly and cut its lineage: reliable
+    ``checkpoint()`` iff a checkpoint dir is configured, else
+    ``localCheckpoint``."""
+    if reliable_checkpoint_enabled(df.sparkSession):
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)

@@ -100,7 +100,6 @@ def bpe_train(
     df: DataFrame,
     text_col: str,
     num_merges: int = 10,
-    reliable: bool | None = None,
 ) -> list[tuple[str, str, int]]:
     """Learn ``num_merges`` merge rules; returns [(left, right, freq), ...]
     in learned order. Stops early if no pair occurs twice."""
@@ -122,7 +121,7 @@ def bpe_train(
             F.array(F.lit(EOW)),
         ).alias("syms"),
     )
-    state = cut_lineage(state, reliable=reliable)
+    state = cut_lineage(state)
 
     rules: list[tuple[str, str, int]] = []
     for _ in range(num_merges):
@@ -149,7 +148,7 @@ def bpe_train(
         state = state.mapInPandas(
             _merge_pair_fn(a, b), "freq long, syms array<string>"
         )
-        state = cut_lineage(state, reliable=reliable)
+        state = cut_lineage(state)
     return rules
 
 

@@ -820,7 +820,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Transitive duplicate clusters from near-dup PAIRS: iterative
     min-label propagation (a.k.a. hash-to-min) with pointer jumping.
@@ -888,7 +887,7 @@ def connected_components(
                 ).alias("component"),
             )
         )
-        new_labels = cut_lineage(new_labels, reliable=reliable)
+        new_labels = cut_lineage(new_labels)
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "id")

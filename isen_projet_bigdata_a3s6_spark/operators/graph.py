@@ -26,7 +26,6 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     iterations: int = 10,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Ranks after ``iterations`` rounds of the power method on the edge
     list (uniform out-edge weights). Returns ``(node, rank)``, ranks
@@ -80,7 +79,7 @@ def pagerank(
                 ),
             )
         )
-        ranks = cut_lineage(ranks, reliable=reliable)
+        ranks = cut_lineage(ranks)
     contrib_edges.unpersist()
     nodes.unpersist()
     return ranks
@@ -92,7 +91,6 @@ def pagerank_convergence(
     dst: str = "dst",
     damping: float = 0.85,
     iterations: int = 10,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Convergence diagnostics for :func:`pagerank`: one row per iteration
     with the L1 delta ``Σ|rank_t − rank_{t−1}|``, the max per-node delta,
@@ -139,7 +137,7 @@ def pagerank_convergence(
                 "rank"
             ),
         )
-        new_ranks = cut_lineage(new_ranks, reliable=reliable)
+        new_ranks = cut_lineage(new_ranks)
         stats = (
             new_ranks.withColumnRenamed("rank", "new_rank")
             .join(ranks.withColumnRenamed("rank", "old_rank"), "node")
@@ -362,7 +360,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 10,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """HITS (Kleinberg 1999): hub and authority scores after
     ``iterations`` mutual-reinforcement rounds on a DIRECTED edge list —
@@ -407,7 +404,6 @@ def hits(
         norm_a = raw_a.agg(F.sqrt(F.sum(F.col("raw") * F.col("raw"))).alias("nz")).first()["nz"]
         auths = cut_lineage(
             raw_a.select("node", (F.col("raw") / F.lit(norm_a)).alias("authority")),
-            reliable=reliable,
         )
         raw_a.unpersist()
         raw_h = (
@@ -419,7 +415,6 @@ def hits(
         norm_h = raw_h.agg(F.sqrt(F.sum(F.col("raw") * F.col("raw"))).alias("nz")).first()["nz"]
         hubs = cut_lineage(
             raw_h.select("node", (F.col("raw") / F.lit(norm_h)).alias("hub")),
-            reliable=reliable,
         )
         raw_h.unpersist()
     out = (

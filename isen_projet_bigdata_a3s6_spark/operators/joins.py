@@ -244,7 +244,6 @@ def knn_join_1nn_grid_exact(
     cell_size: float,
     tiebreak: str | None = None,
     max_rounds: int = 8,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Exact big×big 1-NN: grid-bucketed rounds with doubling cell size.
 
@@ -259,10 +258,6 @@ def knn_join_1nn_grid_exact(
     (NN farther than cell_size·2^max_rounds, e.g. extreme outliers) are
     resolved by a final broadcast 1-NN pass over exactly those probes —
     the output always has one row per probe (empty ``known`` raises).
-
-    ``reliable`` controls per-round lineage cuts (see
-    :mod:`..checkpointing`): None = reliable checkpoint iff a checkpoint dir
-    is configured, else executor-local.
     """
     px, py = probe_coords
     kx, ky = known_coords
@@ -285,7 +280,7 @@ def knn_join_1nn_grid_exact(
         # three branches would otherwise re-run the min_by job and a
         # tiebreak=None tie at the certify boundary could resolve
         # differently per job (duplicate or dropped probe)
-        cand = cut_lineage(cand, reliable=reliable)
+        cand = cut_lineage(cand)
         certified = cand.filter(F.col("__d") <= F.lit(size)).drop("__d", kx, ky)
         resolved_parts.append(certified)
         unresolved = cand.filter(F.col("__d") > F.lit(size)).select(probe_id)
@@ -296,7 +291,6 @@ def knn_join_1nn_grid_exact(
             remaining.join(
                 unresolved.unionByName(no_cand).distinct(), probe_id, "left_semi"
             ),
-            reliable=reliable,
         )
         size *= 2.0
         if remaining.limit(1).count() == 0:
@@ -337,7 +331,6 @@ def knn_join_1nn_auto(
     tiebreak: str | None = None,
     work_threshold: int = 2_000_000,
     target_per_cell: float = 4.0,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """1-NN with size-based dispatch — the engine's default 1-NN entry.
 
@@ -383,7 +376,6 @@ def knn_join_1nn_auto(
     return knn_join_1nn_grid_exact(
         probes, known, probe_id, probe_coords, known_coords,
         payload_cols=payload_cols, cell_size=cell, tiebreak=tiebreak,
-        reliable=reliable,
     )
 
 
@@ -460,7 +452,6 @@ def haversine_knn_1nn_grid_exact(
     tiebreak: str | None = None,
     round_to: int = 6,
     max_rounds: int = 8,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Exact big×big spherical 1-NN: grid-bucketed rounds with doubling
     cell size — the geodesic sibling of :func:`knn_join_1nn_grid_exact`.
@@ -606,7 +597,7 @@ def haversine_knn_1nn_grid_exact(
         # with tiebreak=None a rounded-distance tie straddling the certify
         # radius can resolve differently per job — duplicating or dropping
         # a probe and breaking the row-preserving guarantee (r05 advisory)
-        cand = cut_lineage(cand, reliable=reliable)
+        cand = cut_lineage(cand)
         certified = cand.filter(F.col("__dtrue") <= F.lit(r)).drop("__dtrue")
         resolved_parts.append(certified)
         unresolved = cand.filter(F.col("__dtrue") > F.lit(r)).select(probe_id)
@@ -617,7 +608,6 @@ def haversine_knn_1nn_grid_exact(
             remaining.join(
                 unresolved.unionByName(no_cand).distinct(), probe_id, "left_semi"
             ),
-            reliable=reliable,
         )
         h *= 2.0
         if remaining.limit(1).count() == 0:
@@ -649,7 +639,6 @@ def haversine_knn_1nn_auto(
     round_to: int = 6,
     work_threshold: int = 2_000_000,
     target_per_cell: float = 4.0,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Spherical 1-NN with size-based dispatch — mirrors
     :func:`knn_join_1nn_auto`. |probes|·|known| ≤ ``work_threshold`` →
@@ -685,5 +674,5 @@ def haversine_knn_1nn_auto(
     return haversine_knn_1nn_grid_exact(
         probes, known, probe_id, probe_latlon, known_latlon,
         payload_cols=payload_cols, cell_deg=cell, dist_col=dist_col,
-        tiebreak=tiebreak, round_to=round_to, reliable=reliable,
+        tiebreak=tiebreak, round_to=round_to,
     )

@@ -33,6 +33,8 @@ from .scratch import stage_parquet_files
 
 def register(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
+        if name in _QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
         _QUERIES[name] = fn
         if oracle is not None:
             _ORACLE[name] = oracle
@@ -41,208 +43,9 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# Queries that already carry a driver-signed green row in CORRECTNESS_r01/r02/
-# r03 (r01 = q01–q50, r02 = q51–q100, r03 = q101–q149). The registry is
-# emitted unsigned-first so a capped driver sweep signs the remaining entries
-# each round. q86/q139 (oracle integer-type hash mismatches) and q133 (driver
-# canonicalizer choked on the array column) were red in r03; their fixes land
-# this round, so they stay unsigned for a driver re-check. New queries register
-# with numbers ≥ q150 and land in the priority block automatically.
-#
-# This static floor is UNIONED with whatever CORRECTNESS_r*.json files exist
-# next to the repo root (see _signed_queries): keeping the set current was a
-# recurring manual step that cost a full driver round when missed (the r03
-# verdict's top item), so signing is now derived from the driver's own
-# records — a green or clean rows-only row signs the query, a red row
-# un-signs it so the next capped sweep re-checks it first.
-_R01_SIGNED = set(range(1, 150)) - {86, 133, 139}
-
-# Queries whose CODE (or registered oracle) changed AFTER their last driver
-# signature: {query number: last round whose records are stale}. A query
-# listed here is treated as unsigned while its newest driver record is from
-# a round <= the recorded value, so the unsigned-first emission fronts it
-# into the next capped sweep window for a re-sign on current code — the
-# r08 verdict's "evidence debt" class (a green record that describes older
-# code). Entries retire automatically once a LATER round signs the query;
-# stale entries are added whenever a change lands after a signature.
-#
-# r10 inventory: the signed-zero normalization sweep (the r09 q43 red-row
-# class — VERDICT r09 item 2b) appended `+ 0.0` / `+ 0e0` after every FINAL
-# display ROUND of a possibly-negative float, on both engines, across 27
-# queries (~40 columns). Output is bit-identical on current fixtures except
-# a -0.0 → 0.0 cell (none besides q43's today), but the code/oracle text
-# changed after their last signatures, so all 27 front for an r10 re-sign.
-_STALE_AS_OF: dict[int, int] = {
-    n: 9
-    for n in (
-        19, 30, 43, 58, 64, 81, 108, 145, 169, 170, 200, 208, 219, 231,
-        234, 235, 236, 246, 250, 255, 260, 261, 263, 265, 276, 283, 296,
-        # executor-side tokenizer moved from str.split() (Unicode ws) to
-        # the Java \s class, matching the SQL train path; the family's
-        # oracle TRIM pinned to ASCII space (TRIM(x, ' ')) to match
-        # Spark's trim — DuckDB's default TRIM strips Unicode Zs
-        149, 150, 237,
-        # fixed-point early stop added to the deterministic fits (engine
-        # side only — bit-identical by construction, oracles unchanged)
-        69, 70, 207, 274,
-        # entropy -0.0 normalization (degen-sweep drift under the hardened
-        # gate: -(1·ln 1) of a single-char doc)
-        201,
-        # q142's UDTF tokenizer moved to the RE2 \s class (engine-side
-        # change). The 39-oracle TRIM(x, ' ') pin is NOT fronted: every
-        # changed oracle text was proven byte-equivalent to its signed
-        # predecessor on BOTH driver fixtures (sf0.001 + sf0.01, hardened
-        # comparator), so the standing signatures still certify the exact
-        # hashes the driver would compute — see NOTES round-10 item 16.
-        142,
-    )
-}
-# r11 inventory (each entry supersedes the comprehension above, and stale
-# rounds here are 10 because these queries were re-signed in r10):
-_STALE_AS_OF.update(
-    {
-        # r2 column joined the signed-zero convention (round_disp engine-side,
-        # ROUND + 0e0 oracle-side) — r10 ADVICE medium item
-        263: 10,
-        # oracle's outer |z| > 1.8 filter rebound to the ROUNDED z (it used to
-        # bind to the unrounded inner z — knife edge for z in (1.8, 1.8000005));
-        # engine side already filtered on the rounded statistic
-        169: 10,
-        # probe side restricted to a 1995 order-date window so real orphan
-        # customers survive at sf0.01 (the r10 verdict's vacuously-green row:
-        # both engines returned 0 rows)
-        14: 10,
-        # winnowing fingerprint domain lifted INT32 → BIGINT on both engines
-        # (long documents used to overflow both sides identically)
-        202: 10,
-        # the two sanctioned quadratic oracle baselines gained the q206-style
-        # deterministic modulus cap (no-op through sf0.1: k = 1 below 6k docs
-        # / 2048 vectors; bounds the sf1 smoke) — oracle text + engine changed
-        40: 10,
-        72: 10,
-        # oracle's byte-length moved from CAST(text AS BLOB) (rejects
-        # non-ASCII) to encode(text) — byte-identical on ASCII, and the
-        # unicodews sweep's last both-engine reject becomes a result
-        67: 10,
-        # PQ codebook training moved to the batched per-round trainer
-        # (ml/kmeans.py::kmeans_lloyd_blocks — proven bitwise-identical
-        # codebooks, oracle unchanged; 8× fewer driver round-trips and a
-        # fold-based round plan instead of 128 unrolled distance exprs)
-        207: 10,
-    }
-)
-# r12 inventory: the round-11 snapshot commit (4d26be5) scooped an
-# uncommitted rewrite of ml/kmeans.py::_assign_cell (unrolled per-centroid
-# fold array -> one nested-literal transform fold) that landed AFTER the
-# last recorded battery; q69/q70's newest signatures (r10) predate it, so
-# both front for a re-sign on the current assignment expression.
-_STALE_AS_OF.update({69: 11, 70: 11})
-
-_SIGNED_CACHE: set[int] | None = None
-# query number → newest round with ANY driver record (green or red); filled
-# as a side effect of _signed_queries and used to order the SIGNED block
-# oldest-signature-first (see _priority_order)
-_LATEST_ROUND: dict[int, int] = {}
-
-
-def _signed_queries(root: str | None = None) -> set[int]:
-    """Query numbers with a driver-verified record, derived from the
-    CORRECTNESS_r{N}.json files the driver writes at the repo root
-    (``root`` overrides the location for tests).
-
-    Later rounds override earlier ones (lexicographic order matches round
-    order for the driver's zero-padded names). A row counts as signed when
-    the value hash matched, or when it is a clean rows-only record
-    (``err == "no_oracle"``) for a query that STILL has no oracle — if an
-    oracle was added since, the rows-only record is stale and the query
-    must return to the unsigned block for a real hash check. Any red row
-    (hash fail or a real error) un-signs the query so the unsigned-first
-    emission puts it at the front of the next sweep. Falls back to the
-    static floor when no records are readable (e.g. the entry file runs
-    outside the repo)."""
-    global _SIGNED_CACHE
-    cacheable = root is None
-    if cacheable and _SIGNED_CACHE is not None:
-        return _SIGNED_CACHE
-    import glob
-    import json
-    import os
-
-    import re
-
-    has_oracle = {_qnum(n) for n in _ORACLE}
-    signed = set(_R01_SIGNED)
-    latest_round: dict[int, int] = {}
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)", os.path.basename(path))
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            num = _qnum(name)
-            if not num or not isinstance(row, dict):
-                continue
-            latest_round[num] = max(latest_round.get(num, 0), rnd)
-            green = (
-                row.get("rows_match") is True
-                and row.get("schema_match") is True
-                and row.get("hash_match") is True
-            )
-            rows_only_clean = (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-                and num not in has_oracle
-            )
-            if green or rows_only_clean:
-                signed.add(num)
-            else:
-                signed.discard(num)
-    # stale-signature fronting: a record of OLDER code does not certify the
-    # current code — treat the query as unsigned until a round NEWER than
-    # the staleness watermark re-signs it (see _STALE_AS_OF)
-    for num, stale_round in _STALE_AS_OF.items():
-        if latest_round.get(num, 0) <= stale_round:
-            signed.discard(num)
-    if cacheable:
-        _SIGNED_CACHE = signed
-        _LATEST_ROUND.clear()
-        _LATEST_ROUND.update(latest_round)
-    return signed
-
-
-def _qnum(name: str) -> int:
-    digits = ""
-    for ch in name[1:]:
-        if not ch.isdigit():
-            break
-        digits += ch
-    return int(digits) if digits else 0
-
-
-def _priority_order(names: list[str]) -> list[str]:
-    """Unsigned/stale queries first (registry order), then the signed block
-    OLDEST-SIGNATURE-FIRST (by newest driver-record round, then number).
-    The driver's capped sweep takes a window off the front each round, so
-    after the unsigned block is exhausted the spare slots refresh the
-    longest-unverified green signatures instead of re-signing the same
-    low numbers every round (r09 verdict item 6: ~170 signatures dated to
-    r01–r07 code states while the window kept re-reading q01–q22)."""
-    signed_set = _signed_queries()
-    unsigned = [n for n in names if _qnum(n) not in signed_set]
-    signed = [n for n in names if _qnum(n) in signed_set]
-    signed.sort(key=lambda n: (_LATEST_ROUND.get(_qnum(n), 0), _qnum(n)))
-    return unsigned + signed
-
-
 def queries() -> dict[str, QueryFn]:
-    return {n: _QUERIES[n] for n in _priority_order(list(_QUERIES))}
+    """Every registered query, in registration order."""
+    return dict(_QUERIES)
 
 
 def _harden_decimal_to_double(sql: str) -> str:
@@ -288,9 +91,11 @@ def _harden_decimal_to_double(sql: str) -> str:
 
 
 def oracle_sql() -> dict[str, str]:
+    """The hardened DuckDB twin of every query that has one, in
+    registration order."""
     return {
         name: _harden_decimal_to_double(_ORACLE[name])
-        for name in _priority_order(list(_QUERIES))
+        for name in _QUERIES
         if name in _ORACLE
     }
 

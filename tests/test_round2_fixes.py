@@ -132,8 +132,10 @@ def test_minhash_pairs_lazy_and_cache_released_by_clear(spark):
 
 
 def test_reliable_checkpoint_mode(spark, tmp_path):
-    """ensure_checkpoint_dir + reliable=True exercises checkpoint() (the
-    fault-tolerant cluster path) end-to-end for CC and grid-exact."""
+    """With a checkpoint dir configured, cut_lineage takes the reliable
+    checkpoint() path (the fault-tolerant cluster path) end-to-end for CC;
+    without one it stays executor-local. The dir is unset again afterwards
+    so later tests run the default localCheckpoint path."""
     from isen_projet_bigdata_a3s6_spark.checkpointing import (
         cut_lineage,
         ensure_checkpoint_dir,
@@ -141,17 +143,34 @@ def test_reliable_checkpoint_mode(spark, tmp_path):
     )
     from isen_projet_bigdata_a3s6_spark.functions.dedup import connected_components
 
-    assert ensure_checkpoint_dir(spark, str(tmp_path / "ckpt"))
-    assert reliable_checkpoint_enabled(spark)
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-    )
-    comp = {r["id"]: r["component"] for r in
-            connected_components(pairs, reliable=True).collect()}
-    assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    df = spark.range(10).withColumn("v", F.col("id") * 2)
-    out = cut_lineage(df, reliable=True)
-    assert out.count() == 10
+    ckpt = tmp_path / "ckpt"
+
+    def rdd_dirs():
+        return len(list(ckpt.glob("*/rdd-*")))
+
+    jsc = spark.sparkContext._jsc.sc()
+    assert not reliable_checkpoint_enabled(spark)
+    assert ensure_checkpoint_dir(spark, str(ckpt))
+    try:
+        assert reliable_checkpoint_enabled(spark)
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+        )
+        comp = {r["id"]: r["component"] for r in
+                connected_components(pairs).collect()}
+        assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+        assert rdd_dirs() > 0
+        df = spark.range(10).withColumn("v", F.col("id") * 2)
+        before = rdd_dirs()
+        assert cut_lineage(df).count() == 10
+        assert rdd_dirs() == before + 1
+    finally:
+        # Spark has no public call that unsets the checkpoint dir
+        getattr(jsc, "checkpointDir_$eq")(spark.sparkContext._jvm.scala.Option.apply(None))
+    assert not reliable_checkpoint_enabled(spark)
+    before = rdd_dirs()
+    assert cut_lineage(df).count() == 10
+    assert rdd_dirs() == before
 
 
 def test_simple_ols_inference_matches_numpy(spark):

@@ -136,48 +136,6 @@ def test_anchor_logistic_precision_via_fit(spark):
 
 
 # ---------------------------------------------------------------------------
-# 6. signed set derives from the driver's own CORRECTNESS records
-# ---------------------------------------------------------------------------
-def test_signed_set_tracks_correctness_files(tmp_path):
-    """The unsigned-first emission order is derived from CORRECTNESS_r*.json
-    (manual upkeep of the static set cost a full driver round when missed).
-    Pinned against a synthetic record directory so the test stays valid as
-    the driver writes future rounds' records into the live repo root:
-    a green row signs, a later red row un-signs, a clean rows-only row
-    signs only while the query still has no oracle."""
-    import json
-
-    from isen_projet_bigdata_a3s6_spark.queries import _signed_queries
-
-    def write(name, rows):
-        (tmp_path / name).write_text(json.dumps(rows))
-
-    green = {"rows_match": True, "schema_match": True, "hash_match": True,
-             "spark_rows": 5, "oracle_rows": 5, "err": None}
-    red = dict(green, hash_match=False)
-    rows_only = {"rows_match": None, "schema_match": None, "hash_match": None,
-                 "spark_rows": 5, "oracle_rows": None, "err": "no_oracle"}
-# synthetic rounds 98/99: far above any _STALE_AS_OF watermark, so the
-    # staleness fronting (tested separately in test_round9_fixes) cannot
-    # discard these records — this test pins only the signing derivation
-    write("CORRECTNESS_r98.json", {
-        "q200_x": green,          # green -> signed
-        "q201_x": red,            # red -> unsigned (overrides nothing)
-        "q202_x": rows_only,      # rows-only BUT q202 has an oracle -> stale, unsigned
-        "q264_x": rows_only,      # rows-only and q264 has no oracle (zlib) -> signed
-    })
-    write("CORRECTNESS_r99.json", {
-        "q200_x": red,            # later red overrides earlier green
-        "q201_x": green,          # later green overrides earlier red
-    })
-    signed = _signed_queries(root=str(tmp_path))
-    assert 200 not in signed and 201 in signed
-    assert 202 not in signed and 264 in signed
-    # static floor still underneath
-    assert 1 in signed and 86 not in signed
-
-
-# ---------------------------------------------------------------------------
 # 7. q212 excludes token-empty docs (same slice-edge class as q261)
 # ---------------------------------------------------------------------------
 def test_q212_excludes_token_empty_docs(spark, tmp_path):

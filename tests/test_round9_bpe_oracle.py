@@ -7,7 +7,7 @@ longest-match segmenter — on the clean sf0.001 corpus AND on the corpus
 with the degenerate-sweep rows appended (empty/whitespace/null text, the
 5000-char single token). Pure DuckDB + Python: no Spark needed, so the
 full training replay is pinned cheaply; engine-vs-oracle parity itself is
-pinned by test_queries_oracle below (the repo gate) and the driver."""
+pinned by test_oracle_parity (the repo gate)."""
 import sys
 
 import duckdb
@@ -179,10 +179,3 @@ def test_bpe_oracle_matches_reference_clean(sf_dir):
 def test_bpe_oracle_matches_reference_degenerate(sf_dir):
     run(sf_dir, extra_docs=DEGEN)
 
-
-def test_tokenizer_queries_oracle_parity(spark, sf_dir):
-    from isen_projet_bigdata_a3s6_spark.oracle_check import check_query
-
-    for q in ("q149_bpe_train", "q150_bpe_encode", "q237_wordpiece_stats"):
-        r = check_query(spark, q, sf_dir)
-        assert r.ok, str(r)

@@ -1,8 +1,7 @@
-"""Round-9 fixes: the four r08 ADVICE items plus the stale-signature
-fronting mechanism and the q161 slack-parity proof (VERDICT r08 items 2/3).
+"""Round-9 fixes: the four r08 ADVICE items and the q161 slack-parity
+proof (VERDICT r08 item 3).
 """
 
-import json
 import math
 
 import duckdb
@@ -11,53 +10,6 @@ from pyspark.sql import functions as F
 
 from isen_projet_bigdata_a3s6_spark import queries as Q
 from isen_projet_bigdata_a3s6_spark.oracle_check import DRIVER_FIXTURE_ROOT
-
-
-# ---------------------------------------------------------------------------
-# stale-signature fronting (VERDICT r08 item 2)
-# ---------------------------------------------------------------------------
-def _fake_round(tmp_path, rnd: int, name: str, green: bool = True):
-    row = {
-        "rows_match": green,
-        "schema_match": green,
-        "hash_match": green,
-        "spark_rows": 1,
-        "oracle_rows": 1,
-        "err": None,
-    }
-    (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
-        json.dumps({name: row})
-    )
-
-
-def test_stale_signature_treated_as_unsigned(tmp_path):
-    # q30 is stale as of round 9 (signed-zero sweep): a green record from
-    # r09 must NOT sign it
-    assert Q._STALE_AS_OF.get(30) == 9
-    _fake_round(tmp_path, 9, "q30_cov_corr")
-    assert 30 not in Q._signed_queries(root=str(tmp_path))
-
-
-def test_stale_signature_retires_on_newer_round(tmp_path):
-    # ... but a green record from a LATER round re-signs it automatically
-    _fake_round(tmp_path, 9, "q30_cov_corr")
-    _fake_round(tmp_path, 10, "q30_cov_corr")
-    assert 30 in Q._signed_queries(root=str(tmp_path))
-
-
-def test_stale_queries_front_the_registry():
-    # the emitted order must put every stale/unsigned query before any
-    # signed one, so a capped driver sweep re-signs them first
-    signed = Q._signed_queries()
-    names = list(Q.queries())
-    state = [Q._qnum(n) in signed for n in names]
-    first_signed = state.index(True)
-    assert all(state[first_signed:]), "signed block interrupted by unsigned"
-    for num in Q._STALE_AS_OF:
-        # every stale entry currently without a newer signature sits in
-        # the front block
-        pos = next(i for i, n in enumerate(names) if Q._qnum(n) == num)
-        assert pos < first_signed or state[pos] is True
 
 
 # ---------------------------------------------------------------------------

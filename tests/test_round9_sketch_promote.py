@@ -3,12 +3,13 @@ repo's own SQL-replayable sketches: an md5-hash HyperLogLog (integer
 bit-length registers, exact BIGINT fold) and an HdrHistogram-style base-2
 quantile sketch (pure integer bucket arithmetic).
 
-Pins, in order: (1) cross-engine hash parity through the repo oracle gate;
-(2) the sketch ACCURACY contracts (HLL SE, HDR relative-error bound) vs
-exact answers; (3) the mergeable-sketch property (register frames over any
-split of the data merge to the whole-data frame); (4) the ENGINE sketches
-(approx_count_distinct / percentile_approx / hll_sketch_agg) stay
-demonstrated with tolerance pins now that no contract query runs them."""
+Cross-engine parity of q51/q125 is pinned by test_oracle_parity (the repo
+gate). Pins here, in order: (1) the sketch ACCURACY contracts (HLL SE, HDR
+relative-error bound) vs exact answers; (2) the mergeable-sketch property
+(register frames over any split of the data merge to the whole-data frame);
+(3) the ENGINE sketches (approx_count_distinct / percentile_approx /
+hll_sketch_agg) stay demonstrated with tolerance pins now that no contract
+query runs them."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,14 +21,7 @@ from isen_projet_bigdata_a3s6_spark.operators.sketches import (
     hll_estimate,
     hll_registers,
 )
-from isen_projet_bigdata_a3s6_spark.oracle_check import check_query
 from isen_projet_bigdata_a3s6_spark.sources.readers import load_table
-
-
-def test_q51_q125_oracle_parity(spark, sf_dir):
-    for q in ("q51_approx_distinct_quantile", "q125_hll_rollup"):
-        r = check_query(spark, q, sf_dir)
-        assert r.ok, str(r)
 
 
 def test_hll_accuracy_vs_exact(spark, sf_dir):

@@ -5,22 +5,11 @@ independent Python recomputation."""
 import math
 from collections import Counter
 
-import duckdb
-
+from conftest import duck_table
 from isen_projet_bigdata_a3s6_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
 SF01 = "/root/testdata/sf0.01"
-
-
-def _duck(sf, table):
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT * FROM read_parquet('{sf}/{table}.parquet')"
-    ).fetchall()
-    cols = [d[0] for d in con.description]
-    con.close()
-    return [dict(zip(cols, r)) for r in rows]
 
 
 def _midranks(values):
@@ -36,7 +25,7 @@ def _midranks(values):
 def test_roc_auc_matches_rank_formula(spark):
     rows = Q._QUERIES["q257_roc_curve"](spark, SF).collect()
     auc = float(sum(r["auc_term"] for r in rows))
-    li = _duck(SF, "lineitem")
+    li = duck_table(SF, "lineitem")
     scores = [r["l_quantity"] for r in li]
     labels = [1 if r["l_returnflag"] == "R" else 0 for r in li]
     mr = _midranks(scores)
@@ -63,7 +52,7 @@ def test_roc_curve_shape(spark):
 
 def test_calibration_bins_identity(spark):
     rows = Q._QUERIES["q258_calibration_bins"](spark, SF).collect()
-    li = _duck(SF, "lineitem")
+    li = duck_table(SF, "lineitem")
     by_bin = {}
     for r in li:
         b = min(int(r["l_quantity"] // 5), 9)
@@ -86,7 +75,7 @@ def test_calibration_bins_identity(spark):
 
 def test_association_rules_formulas(spark):
     rows = Q._QUERIES["q259_association_rules"](spark, SF01).collect()
-    li = _duck(SF01, "lineitem")
+    li = duck_table(SF01, "lineitem")
     baskets = {(r["l_orderkey"], r["l_partkey"] % 50) for r in li}
     n_orders = len({o for o, _ in baskets})
     item = Counter(c for _, c in baskets)
@@ -113,7 +102,7 @@ def test_association_rules_formulas(spark):
 
 def test_spearman_matches_python(spark):
     row = Q._QUERIES["q260_spearman_corr"](spark, SF).collect()[0]
-    li = _duck(SF, "lineitem")
+    li = duck_table(SF, "lineitem")
     xs = [r["l_quantity"] for r in li]
     ys = [r["l_extendedprice"] for r in li]
     rx, ry = _midranks(xs), _midranks(ys)
@@ -141,7 +130,7 @@ def test_spearman_perfect_monotone():
 
 def test_cooccurrence_pmi_matches_python(spark):
     rows = Q._QUERIES["q261_cooccurrence_pmi"](spark, SF01).collect()
-    docs = _duck(SF01, "documents")
+    docs = duck_table(SF01, "documents")
     unig, pairs = Counter(), Counter()
     for d in docs:
         toks = d["text"].split(" ")

@@ -4,26 +4,15 @@ growth, session paths — independent Python recomputation per query."""
 import zlib
 from collections import Counter, defaultdict
 
-import duckdb
-
+from conftest import duck_table
 from isen_projet_bigdata_a3s6_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
 
 
-def _duck(sf, table):
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT * FROM read_parquet('{sf}/{table}.parquet')"
-    ).fetchall()
-    cols = [d[0] for d in con.description]
-    con.close()
-    return [dict(zip(cols, r)) for r in rows]
-
-
 def test_cohort_ltv_matches_python(spark):
     rows = Q._QUERIES["q262_cohort_ltv"](spark, SF).collect()
-    orders = _duck(SF, "orders")
+    orders = duck_table(SF, "orders")
     first = {}
     for o in orders:
         d = o["o_orderdate"]
@@ -70,7 +59,7 @@ def test_cohort_ltv_monotone(spark):
 
 def test_grouped_ols_matches_python(spark):
     rows = Q._QUERIES["q263_grouped_ols"](spark, SF).collect()
-    li = _duck(SF, "lineitem")
+    li = duck_table(SF, "lineitem")
     by_flag = defaultdict(list)
     for r in li:
         by_flag[r["l_returnflag"]].append(
@@ -97,7 +86,7 @@ def test_grouped_ols_matches_python(spark):
 
 def test_compression_ratio_matches_zlib(spark):
     rows = Q._QUERIES["q264_compression_ratio"](spark, SF).collect()
-    docs = {d["doc_id"]: d["text"] for d in _duck(SF, "documents")}
+    docs = {d["doc_id"]: d["text"] for d in duck_table(SF, "documents")}
     assert {r["doc_id"] for r in rows} == set(docs)
     for r in rows:
         raw = docs[r["doc_id"]].encode("utf-8")
@@ -120,7 +109,7 @@ def test_compression_ratio_orders_redundancy():
 def test_yoy_growth_matches_python(spark):
     rows = Q._QUERIES["q265_yoy_growth"](spark, SF).collect()
     monthly = defaultdict(float)
-    for o in _duck(SF, "orders"):
+    for o in duck_table(SF, "orders"):
         monthly[(o["o_orderdate"].year, o["o_orderdate"].month)] += o[
             "o_totalprice"
         ]
@@ -140,7 +129,7 @@ def test_yoy_growth_matches_python(spark):
 def test_session_paths_matches_python(spark):
     rows = Q._QUERIES["q266_session_paths"](spark, SF).collect()
     evs = sorted(
-        _duck(SF, "events"),
+        duck_table(SF, "events"),
         key=lambda e: (e["user_id"], e["ts"], e["event_id"]),
     )
     paths = Counter()

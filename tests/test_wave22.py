@@ -4,18 +4,10 @@ isotonic PAVA, file provenance — independent recomputation per query."""
 import math
 from collections import defaultdict
 
-import duckdb
-
+from conftest import duck_rows
 from isen_projet_bigdata_a3s6_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
-
-
-def _duck_rows(sql):
-    con = duckdb.connect()
-    rows = con.execute(sql).fetchall()
-    con.close()
-    return rows
 
 
 def _numpy_hits(edges, iterations=8):
@@ -39,7 +31,7 @@ def _numpy_hits(edges, iterations=8):
 
 def test_hits_matches_numpy(spark):
     rows = Q._QUERIES["q267_hits"](spark, SF).collect()
-    edges = _duck_rows(
+    edges = duck_rows(
         f"""SELECT DISTINCT 'c' || o_custkey, 'p' || l_partkey
             FROM read_parquet('{SF}/lineitem.parquet') l
             JOIN read_parquet('{SF}/orders.parquet') o
@@ -93,7 +85,7 @@ def test_ridge_matches_numpy(spark):
     import numpy as np
 
     row = Q._QUERIES["q269_ridge_regression"](spark, SF).collect()[0]
-    data = _duck_rows(
+    data = duck_rows(
         f"SELECT l_quantity, l_discount, l_extendedprice FROM "
         f"read_parquet('{SF}/lineitem.parquet')"
     )
@@ -151,7 +143,7 @@ def test_isotonic_matches_reference_pava(spark):
 
 def test_file_provenance_matches_duckdb(spark):
     rows = Q._QUERIES["q271_file_provenance"](spark, SF).collect()
-    exp = _duck_rows(
+    exp = duck_rows(
         f"""SELECT regexp_extract(filename, '([^/]+)$', 1) AS f,
                    COUNT(*), MIN(l_orderkey), MAX(l_orderkey),
                    COUNT(DISTINCT l_partkey)

@@ -4,24 +4,16 @@ Mahalanobis outliers — independent recomputation per query."""
 import re
 from collections import defaultdict
 
-import duckdb
-
+from conftest import duck_rows
 from isen_projet_bigdata_a3s6_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
 
 
-def _duck_rows(sql):
-    con = duckdb.connect()
-    rows = con.execute(sql).fetchall()
-    con.close()
-    return rows
-
-
 def test_negative_sampling_excludes_positives(spark):
     rows = Q._QUERIES["q272_negative_sampling"](spark, SF).collect()
     pos = set(
-        _duck_rows(
+        duck_rows(
             f"""SELECT DISTINCT o_custkey, l_partkey % 100
             FROM read_parquet('{SF}/lineitem.parquet') l
             JOIN read_parquet('{SF}/orders.parquet') o
@@ -57,7 +49,7 @@ def test_negative_sampling_deterministic(spark):
 
 def test_sequence_pattern_matches_python(spark):
     rows = Q._QUERIES["q273_sequence_pattern"](spark, SF).collect()
-    evs = _duck_rows(
+    evs = duck_rows(
         f"SELECT user_id, ts, event_id, event_type FROM "
         f"read_parquet('{SF}/events.parquet')"
     )
@@ -103,7 +95,7 @@ def _python_bt(matrix_rows, iters=100):
 
 def test_bradley_terry_matches_python(spark):
     rows = Q._QUERIES["q274_bradley_terry"](spark, SF).collect()
-    matrix = _duck_rows(
+    matrix = duck_rows(
         f"""WITH unit AS (
           SELECT l_partkey AS pk, l_suppkey AS s,
                  CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,4)))
@@ -131,7 +123,7 @@ def test_mahalanobis_matches_numpy(spark):
     import numpy as np
 
     rows = Q._QUERIES["q275_mahalanobis_outliers"](spark, SF).collect()
-    data = _duck_rows(
+    data = duck_rows(
         f"SELECT l_returnflag, l_quantity, l_discount FROM "
         f"read_parquet('{SF}/lineitem.parquet')"
     )

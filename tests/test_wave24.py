@@ -3,18 +3,10 @@ normalization, shard manifest — independent recomputation per query."""
 
 from collections import Counter, defaultdict
 
-import duckdb
-
+from conftest import duck_rows
 from isen_projet_bigdata_a3s6_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
-
-
-def _duck_rows(sql):
-    con = duckdb.connect()
-    rows = con.execute(sql).fetchall()
-    con.close()
-    return rows
 
 
 def _slope(pts):
@@ -28,7 +20,7 @@ def _slope(pts):
 
 def test_simpson_audit_matches_python(spark):
     row = Q._QUERIES["q276_simpson_audit"](spark, SF).collect()[0]
-    data = _duck_rows(
+    data = duck_rows(
         f"SELECT l_partkey % 10, l_quantity, l_extendedprice FROM "
         f"read_parquet('{SF}/lineitem.parquet')"
     )
@@ -60,7 +52,7 @@ def test_simpson_flag_fires_on_constructed_paradox():
 
 def test_time_to_convert_matches_python(spark):
     row = Q._QUERIES["q277_time_to_convert"](spark, SF).collect()[0]
-    evs = _duck_rows(
+    evs = duck_rows(
         f"SELECT user_id, ts, event_type FROM read_parquet('{SF}/events.parquet')"
     )
     v0 = {}
@@ -89,7 +81,7 @@ def test_time_to_convert_matches_python(spark):
 
 def test_quantile_normalization_properties(spark):
     rows = Q._QUERIES["q278_quantile_normalization"](spark, SF).collect()
-    docs = _duck_rows(
+    docs = duck_rows(
         f"SELECT doc_id, source, n_chars FROM read_parquet('{SF}/documents.parquet')"
     )
     pooled = sorted(v for _, _, v in docs)
@@ -123,7 +115,7 @@ def test_quantile_normalization_properties(spark):
 
 def test_shard_manifest_matches_python(spark):
     rows = Q._QUERIES["q279_shard_manifest"](spark, SF).collect()
-    docs = _duck_rows(
+    docs = duck_rows(
         f"SELECT doc_id, n_chars FROM read_parquet('{SF}/documents.parquet')"
     )
     agg = defaultdict(lambda: [0, 0, 0])
@@ -140,7 +132,7 @@ def test_shard_manifest_matches_python(spark):
 
 def test_shard_manifest_detects_single_row_change(spark):
     # the manifest's purpose: one changed row flips exactly one checksum
-    docs = _duck_rows(
+    docs = duck_rows(
         f"SELECT doc_id, n_chars FROM read_parquet('{SF}/documents.parquet')"
     )
     base = defaultdict(int)

@@ -4,18 +4,10 @@ independent recomputation per query."""
 import math
 from collections import defaultdict
 
-import duckdb
-
+from conftest import duck_rows
 from isen_projet_bigdata_a3s6_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
-
-
-def _duck_rows(sql):
-    con = duckdb.connect()
-    rows = con.execute(sql).fetchall()
-    con.close()
-    return rows
 
 
 def _python_grid_dbscan(points, h=0.08, min_pts=4):
@@ -53,7 +45,7 @@ def _python_grid_dbscan(points, h=0.08, min_pts=4):
 
 def test_grid_dbscan_matches_python(spark):
     rows = Q._QUERIES["q280_grid_dbscan"](spark, SF).collect()
-    pts = _duck_rows(
+    pts = duck_rows(
         f"SELECT vec_id, embedding[1], embedding[2] FROM "
         f"read_parquet('{SF}/embeddings.parquet')"
     )
@@ -75,7 +67,7 @@ def test_grid_dbscan_has_structure(spark):
 
 def test_retrieval_metrics_matches_python(spark):
     rows = Q._QUERIES["q281_retrieval_metrics"](spark, SF).collect()
-    embs = _duck_rows(
+    embs = duck_rows(
         f"SELECT vec_id, embedding, label FROM "
         f"read_parquet('{SF}/embeddings.parquet')"
     )
@@ -113,7 +105,7 @@ def test_retrieval_metrics_matches_python(spark):
 
 def test_fairness_audit_matches_python(spark):
     rows = Q._QUERIES["q282_fairness_audit"](spark, SF).collect()
-    data = _duck_rows(
+    data = duck_rows(
         f"""SELECT c_mktsegment, o_totalprice, o_orderstatus
             FROM read_parquet('{SF}/orders.parquet') o
             JOIN read_parquet('{SF}/customer.parquet') c

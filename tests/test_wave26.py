@@ -3,23 +3,15 @@ independent recomputation per query."""
 
 from collections import defaultdict
 
-import duckdb
-
+from conftest import duck_rows
 from isen_projet_bigdata_a3s6_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
 
 
-def _duck_rows(sql):
-    con = duckdb.connect()
-    rows = con.execute(sql).fetchall()
-    con.close()
-    return rows
-
-
 def test_price_volume_mix_reconstructs_delta(spark):
     rows = Q._QUERIES["q283_price_volume_mix"](spark, SF).collect()
-    data = _duck_rows(
+    data = duck_rows(
         f"""SELECT l_returnflag, year(l_shipdate), l_quantity, l_extendedprice
             FROM read_parquet('{SF}/lineitem.parquet')
             WHERE year(l_shipdate) IN (1995, 1996)"""
@@ -48,7 +40,7 @@ def test_price_volume_mix_reconstructs_delta(spark):
 def test_transition_dwell_matches_python(spark):
     rows = Q._QUERIES["q284_transition_dwell"](spark, SF).collect()
     evs = sorted(
-        _duck_rows(
+        duck_rows(
             f"SELECT user_id, ts, event_id, event_type FROM "
             f"read_parquet('{SF}/events.parquet')"
         )
@@ -73,7 +65,7 @@ def test_column_stats_matches_duckdb(spark):
     rows = {r["col"]: r for r in Q._QUERIES["q285_column_stats"](spark, SF).collect()}
     assert set(rows) == {"l_quantity", "l_extendedprice", "l_returnflag"}
     for col in ("l_quantity", "l_extendedprice"):
-        exp = _duck_rows(
+        exp = duck_rows(
             f"""SELECT COUNT(DISTINCT {col}), MIN({col}), MAX({col}),
                        quantile_cont({col}, 0.5)
                 FROM read_parquet('{SF}/lineitem.parquet')"""

@@ -4,18 +4,10 @@ independent recomputation per query."""
 import math
 from collections import defaultdict
 
-import duckdb
-
+from conftest import duck_rows
 from isen_projet_bigdata_a3s6_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
-
-
-def _duck_rows(sql):
-    con = duckdb.connect()
-    rows = con.execute(sql).fetchall()
-    con.close()
-    return rows
 
 
 def test_holt_matches_python_recursion(spark):
@@ -23,7 +15,7 @@ def test_holt_matches_python_recursion(spark):
         Q._QUERIES["q286_holt_forecast"](spark, SF).collect(),
         key=lambda r: r["day"],
     )
-    daily = _duck_rows(
+    daily = duck_rows(
         f"""SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
                    CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE)
             FROM read_parquet('{SF}/orders.parquet') GROUP BY 1 ORDER BY 1"""
@@ -72,7 +64,7 @@ def _shingles(text, n=8):
 
 def test_containment_matches_naive_python(spark):
     rows = Q._QUERIES["q287_containment_join"](spark, SF).collect()
-    docs = _duck_rows(
+    docs = duck_rows(
         f"SELECT doc_id, text FROM read_parquet('{SF}/documents.parquet')"
     )
     sets = {did: _shingles(tx) for did, tx in docs}
@@ -104,7 +96,7 @@ def test_containment_asymmetric_by_construction():
 
 def test_abc_xyz_matches_python(spark):
     rows = Q._QUERIES["q288_abc_xyz"](spark, SF).collect()
-    li = _duck_rows(
+    li = duck_rows(
         f"""SELECT l_partkey, year(l_shipdate)*12 + month(l_shipdate),
                    l_quantity, l_extendedprice
             FROM read_parquet('{SF}/lineitem.parquet')"""

@@ -4,23 +4,15 @@
 import math
 from collections import Counter, defaultdict
 
-import duckdb
-
+from conftest import duck_rows
 from isen_projet_bigdata_a3s6_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
 
 
-def _duck_rows(sql):
-    con = duckdb.connect()
-    rows = con.execute(sql).fetchall()
-    con.close()
-    return rows
-
-
 def test_knn_classifier_matches_python(spark):
     rows = Q._QUERIES["q289_knn_classifier"](spark, SF).collect()
-    embs = _duck_rows(
+    embs = duck_rows(
         f"SELECT vec_id, embedding, label FROM "
         f"read_parquet('{SF}/embeddings.parquet')"
     )
@@ -50,7 +42,7 @@ def test_knn_classifier_matches_python(spark):
 
 def test_interval_coverage_matches_python(spark):
     rows = Q._QUERIES["q290_interval_coverage"](spark, SF).collect()
-    evs = _duck_rows(
+    evs = duck_rows(
         f"SELECT user_id, ts FROM read_parquet('{SF}/events.parquet')"
     )
     by_user = defaultdict(list)
@@ -78,7 +70,7 @@ def test_interval_coverage_matches_python(spark):
 
 def test_interval_coverage_bounds(spark):
     rows = Q._QUERIES["q290_interval_coverage"](spark, SF).collect()
-    n_events = _duck_rows(
+    n_events = duck_rows(
         f"SELECT user_id, COUNT(*) FROM read_parquet('{SF}/events.parquet') GROUP BY 1"
     )
     counts = dict(n_events)
@@ -89,7 +81,7 @@ def test_interval_coverage_bounds(spark):
 
 def test_forecast_backtest_matches_python(spark):
     rows = {r["method"]: r for r in Q._QUERIES["q291_forecast_backtest"](spark, SF).collect()}
-    daily = _duck_rows(
+    daily = duck_rows(
         f"""SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
                    CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE)
             FROM read_parquet('{SF}/orders.parquet') GROUP BY 1 ORDER BY 1"""

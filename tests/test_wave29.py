@@ -4,23 +4,15 @@ recomputation per query."""
 import math
 from collections import defaultdict
 
-import duckdb
-
+from conftest import duck_rows
 from isen_projet_bigdata_a3s6_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
 
 
-def _duck_rows(sql):
-    con = duckdb.connect()
-    rows = con.execute(sql).fetchall()
-    con.close()
-    return rows
-
-
 def test_logrank_matches_python(spark):
     row = Q._QUERIES["q292_logrank_test"](spark, SF).collect()[0]
-    evs = _duck_rows(
+    evs = duck_rows(
         f"SELECT user_id, CAST(ts AS DATE), event_type FROM "
         f"read_parquet('{SF}/events.parquet')"
     )
@@ -80,7 +72,7 @@ def test_logrank_identical_groups_is_zero():
 
 def test_bootstrap_ci_matches_python(spark):
     row = Q._QUERIES["q293_bootstrap_ci"](spark, SF).collect()[0]
-    orders = _duck_rows(
+    orders = duck_rows(
         f"SELECT o_orderkey, o_totalprice FROM read_parquet('{SF}/orders.parquet')"
     )
     means = []

@@ -2,23 +2,15 @@
 
 from collections import defaultdict
 
-import duckdb
-
+from conftest import duck_rows
 from isen_projet_bigdata_a3s6_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
 
 
-def _duck_rows(sql):
-    con = duckdb.connect()
-    rows = con.execute(sql).fetchall()
-    con.close()
-    return rows
-
-
 def test_corrupt_ingest_quarantines_exactly_three(spark):
     rows = Q._QUERIES["q294_corrupt_csv_ingest"](spark, SF).collect()
-    exp = _duck_rows(
+    exp = duck_rows(
         f"""SELECT o_orderstatus, COUNT(*), SUM(o_totalprice)
             FROM read_parquet('{SF}/orders.parquet')
             WHERE o_totalprice > 150000 GROUP BY 1"""
@@ -56,14 +48,14 @@ def test_corrupt_ingest_permissive_semantics(spark):
 
 def test_wide_table_matches_python(spark):
     rows = Q._QUERIES["q295_wide_table_build"](spark, SF).collect()
-    data = _duck_rows(
+    data = duck_rows(
         f"""SELECT r_name, n_name, c_mktsegment, o.o_orderkey
             FROM read_parquet('{SF}/orders.parquet') o
             JOIN read_parquet('{SF}/customer.parquet') c ON o_custkey = c_custkey
             JOIN read_parquet('{SF}/nation.parquet') n ON c_nationkey = n_nationkey
             JOIN read_parquet('{SF}/region.parquet') r ON n_regionkey = r_regionkey"""
     )
-    li = _duck_rows(
+    li = duck_rows(
         f"SELECT l_orderkey, l_extendedprice, l_discount FROM "
         f"read_parquet('{SF}/lineitem.parquet')"
     )

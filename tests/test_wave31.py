@@ -3,23 +3,15 @@
 import math
 from collections import Counter, defaultdict
 
-import duckdb
-
+from conftest import duck_rows
 from isen_projet_bigdata_a3s6_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
 
 
-def _duck_rows(sql):
-    con = duckdb.connect()
-    rows = con.execute(sql).fetchall()
-    con.close()
-    return rows
-
-
 def test_fellegi_sunter_matches_python(spark):
     rows = Q._QUERIES["q296_fellegi_sunter"](spark, SF).collect()
-    custs = _duck_rows(
+    custs = duck_rows(
         f"SELECT c_custkey, c_nationkey, c_mktsegment, c_acctbal, c_name "
         f"FROM read_parquet('{SF}/customer.parquet')"
     )
@@ -74,10 +66,10 @@ def _haversine(lat1, lon1, lat2, lon2):
 
 def test_haversine_knn_matches_python(spark):
     rows = Q._QUERIES["q297_haversine_knn"](spark, SF).collect()
-    custs = _duck_rows(
+    custs = duck_rows(
         f"SELECT c_custkey FROM read_parquet('{SF}/customer.parquet')"
     )
-    supps = _duck_rows(
+    supps = duck_rows(
         f"SELECT s_suppkey FROM read_parquet('{SF}/supplier.parquet')"
     )
     spos = [

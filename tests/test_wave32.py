@@ -2,18 +2,10 @@
 
 from collections import Counter
 
-import duckdb
-
+from conftest import duck_rows
 from isen_projet_bigdata_a3s6_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
-
-
-def _duck_rows(sql):
-    con = duckdb.connect()
-    rows = con.execute(sql).fetchall()
-    con.close()
-    return rows
 
 
 def _energy(xs, ys):
@@ -29,7 +21,7 @@ def _energy(xs, ys):
 
 def test_energy_distance_matches_python(spark):
     row = Q._QUERIES["q298_energy_distance"](spark, SF).collect()[0]
-    data = _duck_rows(
+    data = duck_rows(
         f"SELECT l_returnflag, l_quantity FROM "
         f"read_parquet('{SF}/lineitem.parquet') WHERE l_returnflag IN ('R','N')"
     )
@@ -51,7 +43,7 @@ def test_setcover_matches_python_greedy(spark):
         Q._QUERIES["q299_setcover_selection"](spark, SF).collect(),
         key=lambda r: r["pick_order"],
     )
-    docs = _duck_rows(
+    docs = duck_rows(
         f"SELECT doc_id, text FROM read_parquet('{SF}/documents.parquet')"
     )
     sets = {}
