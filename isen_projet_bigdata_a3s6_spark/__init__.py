@@ -4,17 +4,19 @@ arthur5775/ISEN_projet_BigData_A3S6 (reference: a single R analytics script,
 
 Layout
 ------
-- ``session``      SparkSession factory tuned for local[32] and 100 TB posture
-- ``sources``      scans (parquet/CSV/JSON/binary) and sinks
+- ``session``      SparkSession factory sized to the host (CPU affinity,
+                   half of MemTotal) and the session contract
+- ``sources``      scans (parquet/CSV/JSON) and sinks
 - ``operators``    relational operators: cleaning, projection, filters,
                    joins (incl. 1-NN spatial), aggregations, windows, set ops
 - ``functions``    scalar/column function library: strings, geo (CRS), text
-                   analysis, dedup (exact/MinHash/SimHash), similarity search
-- ``stats``        statistics-as-aggregation: cov/corr matrices, chi-square,
-                   ANOVA, closed-form OLS + p-value special functions
+                   analysis, near-dup (MinHash/SimHash), similarity search
+- ``stats``        statistics as DataFrames: cov/corr pairs, chi-square,
+                   ANOVA, closed-form OLS, rank tests
 - ``ml``           Spark ML wrappers (multiple OLS w/ inference, logistic)
 - ``plans``        the reference's six-part pipeline over a ``trees`` table
-- ``streaming``    event-time windows (tumbling/sliding/session) + streaming
+- ``streaming``    event-time windows (tumbling/sliding/session), stream-
+                   stream joins, stateful operators, restart recovery
 - ``multimodal``   binary image/audio columns: schema + batch plumbing (stubs)
 
 Everything is DataFrame/SQL-first so Catalyst handles pushdown, pruning,

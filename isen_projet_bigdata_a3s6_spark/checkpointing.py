@@ -9,16 +9,15 @@ plan nests unboundedly. Two modes:
   real cluster loses the blocks and kills the job mid-iteration.
 - reliable ``checkpoint()`` (used automatically when a checkpoint dir is
   set): blocks go to the checkpoint directory (HDFS/object store on a
-  cluster) and survive executor loss — the 100 TB posture.
+  cluster) and survive executor loss.
 
-Enable the reliable path by calling :func:`ensure_checkpoint_dir` before
-running iterative operators (with no ``path`` it reads
-``SPARK_GRAFT_CHECKPOINT_DIR``).
+Enable the reliable path with Spark's own setting: the
+``spark.checkpoint.dir`` conf when the session is built (for example
+``get_spark(extra_conf={"spark.checkpoint.dir": path})``), or
+``spark.sparkContext.setCheckpointDir(path)`` on a running session.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -26,19 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 def reliable_checkpoint_enabled(spark: SparkSession) -> bool:
     """True iff a reliable checkpoint dir is configured on the context."""
     return spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-
-
-def ensure_checkpoint_dir(spark: SparkSession, path: str | None = None) -> bool:
-    """Configure the reliable checkpoint dir from ``path`` or
-    ``$SPARK_GRAFT_CHECKPOINT_DIR``. Returns True if a dir is configured
-    after the call (idempotent)."""
-    if reliable_checkpoint_enabled(spark):
-        return True
-    path = path or os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if path:
-        spark.sparkContext.setCheckpointDir(path)
-        return True
-    return False
 
 
 def cut_lineage(df: DataFrame) -> DataFrame:

@@ -1,5 +1,6 @@
-"""Deduplication operators for the training-data surface
-(BASELINE.json north_star): exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Near-duplicate operators for the training-data surface
+(BASELINE.json north_star): MinHash+LSH, SimHash, n-gram Jaccard, and the
+connected components that cluster their pairs.
 
 Scale posture: every variant is groupBy/equi-join shaped — candidate
 generation via hash buckets (band LSH / simhash prefix), then pairwise
@@ -14,21 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .text import char_ngrams, fingerprint
-
-
-def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Exact dedup: keep the lowest-id row per normalized-text fingerprint.
-    One shuffle on the 64-bit fingerprint (never on the full text)."""
-    w = W.partitionBy("__fp").orderBy(F.col(id_col).asc())
-    return (
-        df.withColumn("__fp", fingerprint(text_col))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__fp", "__rn")
-    )
-
-
+from .text import char_ngrams
 
 
 # seed for the md5_affine minhash family's per-row affine constants —
@@ -428,17 +415,6 @@ def neardup_clusters_oracle_sql(
              AS is_canonical
     FROM labels
     """
-
-
-def minhash_dedup(
-    df: DataFrame, text_col: str, id_col: str, **kwargs
-) -> DataFrame:
-    """MinHash dedup: drop every doc that near-matches a lower-id doc.
-    (Connected-component clustering is the full variant; keep-lowest-per-pair
-    is the standard one-pass approximation.)"""
-    pairs = minhash_dedup_pairs(df, text_col, id_col, **kwargs)
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
 
 
 def simhash_signatures(
@@ -906,17 +882,6 @@ def connected_components(
             "(pointer jumping makes each round cover 2^k-hop chains)"
         )
     return labels
-
-
-def dedup_transitive(
-    df: DataFrame, pairs: DataFrame, id_col: str, id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
-    """Keep one survivor (the min id) per transitive near-dup cluster."""
-    comp = connected_components(pairs, id_a, id_b)
-    losers = comp.filter(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
 
 
 def editdist1_pairs(

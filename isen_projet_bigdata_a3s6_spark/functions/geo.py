@@ -69,12 +69,6 @@ def with_wgs84(df, x_col: str = "X", y_col: str = "Y"):
     )
 
 
-def raster_align(lon: Column, lat: Column, dlon: float = 17.863636, dlat: float = 10.67772) -> tuple[Column, Column]:
-    """G2: constant georeference shift to align to the background raster
-    (R_groupe4.R:103-104)."""
-    return lon - F.lit(dlon), lat - F.lit(dlat)
-
-
 EARTH_RADIUS_KM = 6371.0088  # IUGG mean earth radius
 
 

@@ -78,32 +78,9 @@ def knuth_split_sql(key_col: str, test_frac: float = 0.2) -> tuple[str, str]:
 
 
 # ---------------------------------------------------------------------------
-# evaluator tables (single-pass aggregates; parity with Spark ML evaluators
+# evaluator table (single-pass aggregate; parity with Spark ML's evaluator
 # is pinned in tests)
 # ---------------------------------------------------------------------------
-def regression_metrics(scored: DataFrame, label: str, pred: str = "pred") -> DataFrame:
-    """One-row (r2, rmse, mae, n) — the RegressionEvaluator bundle as one
-    aggregation pass. Double sums here are metric-grade (last-ULP order
-    dependence): use :func:`train_test_ols_eval` when oracle-exactness is
-    required."""
-    resid = F.col(label) - F.col(pred)
-    agg = scored.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(resid * resid).alias("sse"),
-        F.sum(F.abs(resid)).alias("sae"),
-        F.sum(F.col(label)).alias("sy"),
-        F.sum(F.col(label) * F.col(label)).alias("syy"),
-    )
-    n = F.col("n").cast("double")
-    sst = F.col("syy") - F.col("sy") * F.col("sy") / n
-    return agg.select(
-        (F.lit(1.0) - F.col("sse") / sst).alias("r2"),
-        F.sqrt(F.col("sse") / n).alias("rmse"),
-        (F.col("sae") / n).alias("mae"),
-        F.col("n").cast("long").alias("n"),
-    )
-
-
 def classification_metrics(
     scored: DataFrame, label: str, pred: str = "prediction"
 ) -> DataFrame:

@@ -56,14 +56,6 @@ def summary_stats(
     return grouped.agg(*aggs)
 
 
-def grouped_means(df: DataFrame, group_by: list[str], value_cols: list[str]) -> DataFrame:
-    """A3/A4: grouped means over several columns (R_groupe4.R:231-246).
-    Spark ``avg`` skips nulls = the reference's ``na.rm=TRUE``."""
-    return df.groupBy(*group_by).agg(
-        *[dec_avg(c).alias(f"mean_{c}") for c in value_cols]
-    )
-
-
 def group_count(df: DataFrame, group_by: list[str], count_name: str = "n") -> DataFrame:
     """A6/A11: grouped count — the shape behind all 22 reference bar charts."""
     return df.groupBy(*group_by).agg(F.count(F.lit(1)).alias(count_name))

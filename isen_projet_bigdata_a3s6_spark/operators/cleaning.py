@@ -73,12 +73,6 @@ def dedup_keep_first(df: DataFrame, keys: list[str], order_by: list[str]) -> Dat
     )
 
 
-def dedup_any(df: DataFrame, keys: list[str]) -> DataFrame:
-    """F2 relaxed: arbitrary survivor per key — cheaper (no sort, pure
-    hash-agg) when the reference's keep-first order doesn't matter."""
-    return df.dropDuplicates(keys)
-
-
 def drop_null_rows(df: DataFrame, cols: list[str]) -> DataFrame:
     """F3: the 13-filter null-drop chain (R_groupe4.R:55-70) as one filter."""
     return df.dropna(subset=cols)

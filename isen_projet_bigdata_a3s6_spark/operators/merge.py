@@ -1,17 +1,14 @@
-"""MERGE / upsert / SCD2 emulation (no Delta/Iceberg jars in this image —
-the same logic those formats run, expressed as anti-join + union + window,
-per the standard emulation pattern).
+"""MERGE / upsert emulation (no Delta/Iceberg jars in this image — the
+same logic those formats run, expressed as anti-join + union, per the
+standard emulation pattern).
 
 Scale posture: one shuffle on the merge key for the anti-join; the updates
-side is usually small → broadcast. SCD2 adds one window over the key to
-close previous versions.
+side is usually small → broadcast.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
-from pyspark.sql import functions as F
 
 
 def merge_upsert(target: DataFrame, updates: DataFrame, key: str | list[str]) -> DataFrame:
@@ -21,41 +18,6 @@ def merge_upsert(target: DataFrame, updates: DataFrame, key: str | list[str]) ->
     keys = [key] if isinstance(key, str) else list(key)
     kept = target.join(updates.select(*keys), keys, "left_anti")
     return kept.unionByName(updates)
-
-
-def merge_delete(target: DataFrame, deletes: DataFrame, key: str | list[str]) -> DataFrame:
-    """WHEN MATCHED DELETE: remove target rows whose key appears in deletes."""
-    keys = [key] if isinstance(key, str) else list(key)
-    return target.join(deletes.select(*keys), keys, "left_anti")
-
-
-def scd2_apply(
-    dim: DataFrame,
-    updates: DataFrame,
-    key: str,
-    effective_col: str,
-    end_col: str = "valid_to",
-    current_col: str = "is_current",
-) -> DataFrame:
-    """Slowly-changing-dimension type 2: append new versions, close out the
-    previous current version of each updated key.
-
-    ``dim`` columns: key, attributes, ``effective_col`` (valid_from),
-    ``end_col`` (null = open), ``current_col``. ``updates`` columns: key,
-    attributes, ``effective_col`` for the new version.
-    """
-    new_rows = updates.withColumn(end_col, F.lit(None).cast("timestamp")).withColumn(
-        current_col, F.lit(True)
-    )
-    combined = dim.unionByName(new_rows)
-    w = W.partitionBy(key).orderBy(F.col(effective_col).asc())
-    nxt = F.lead(F.col(effective_col)).over(w)
-    return (
-        combined.withColumn(
-            end_col, F.coalesce(F.col(end_col), nxt)
-        )
-        .withColumn(current_col, F.col(end_col).isNull())
-    )
 
 
 def merge_partition_overwrite(

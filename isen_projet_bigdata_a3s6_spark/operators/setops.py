@@ -10,10 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.unionByName(b)
-
-
 def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b).distinct()
 

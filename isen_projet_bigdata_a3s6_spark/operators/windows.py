@@ -16,17 +16,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
-def with_row_number(df: DataFrame, partition_by: list[str], order_by: list[Column], name: str = "rn") -> DataFrame:
-    w = W.partitionBy(*partition_by).orderBy(*order_by)
-    return df.withColumn(name, F.row_number().over(w))
-
-
-def with_rank(df: DataFrame, partition_by: list[str], order_by: list[Column], dense: bool = False, name: str = "rnk") -> DataFrame:
-    w = W.partitionBy(*partition_by).orderBy(*order_by)
-    fn = F.dense_rank() if dense else F.rank()
-    return df.withColumn(name, fn.over(w))
-
-
 def with_lag(df: DataFrame, col: str, partition_by: list[str], order_by: list[Column], offset: int = 1, name: str | None = None) -> DataFrame:
     w = W.partitionBy(*partition_by).orderBy(*order_by)
     return df.withColumn(name or f"{col}_lag{offset}", F.lag(col, offset).over(w))
@@ -145,12 +134,7 @@ def global_prefix_sum(
     return out.drop(*drop)
 
 
-def global_midranks(
-    df: DataFrame,
-    value_col: str,
-    out_col: str,
-    ties: str = "auto",
-) -> DataFrame:
+def global_midranks(df: DataFrame, value_col: str, out_col: str) -> DataFrame:
     """Attach the DOUBLED tie-midrank ``2r = 2·c_less + c_eq + 1`` of
     ``value_col`` to every row, without a single-reducer window and
     without the distinct-value detour (r12, for the Spearman shape).
@@ -181,85 +165,18 @@ def global_midranks(
     global_prefix_sum convention — two independently-sampled range
     exchanges could draw different boundaries).
 
-    SKEW CONTRACT (``ties``, r13): equal values CO-LOCATE under
-    ``repartitionByRange`` by construction, so one dominant value lands
-    its whole tie group in one partition and the per-partition rank
-    window serializes on it — the in-place path is only right for
-    near-unique columns (max tie group ≪ rows/partitions, e.g. q260's
-    price).
-
-    - ``"narrow"`` — caller asserts that contract; in-place path, no
-      probe (q260's price: tie groups are ~rows/|distinct prices|, flat).
-    - ``"wide"`` — distinct-table fallback: groupBy(value) → counts
-      (map-side partial aggregation absorbs the hot value),
-      :func:`global_prefix_sum` over the |distinct|-row table, midranks
-      joined back (null-safe, no broadcast hint — a wide-tie distinct
-      table is small and broadcasts on stats; if it does not, AQE
-      skew-join splitting handles the hot probe partition, which a rank
-      WINDOW could never split).
-    - ``"auto"`` — one exact tie probe (groupBy count + max, column-
-      pruned, skew-safe via partial agg) picks: wide when the largest
-      tie group exceeds ~2 ideal partitions (``max_cnt·nparts > 2·n``).
-      The probe is an extra pass over the value column — callers on a
-      hot path with a known column should pass the contract explicitly.
-
-    Both paths produce identical ranks (same ±0.0/NaN/NULL semantics —
-    the ``__key`` normalization happens before either; pinned in
-    tests/test_round13_opt.py including a 90 %-one-value corpus)."""
+    SKEW CONTRACT: because equal values co-locate, one dominant value
+    lands its whole tie group in one partition and the per-partition rank
+    window serializes on it. Use this only for near-unique columns (max
+    tie group ≪ rows/partitions, e.g. q260's price); a column with few
+    distinct values belongs on the distinct-table path (groupBy counts →
+    :func:`global_prefix_sum` → join back), as q260 does for quantity."""
     dt = dict(df.dtypes)[value_col]
     v = F.col(value_col)
     key = F.when(v == 0.0, F.lit(0.0).cast(dt)).otherwise(v) if dt in (
         "double", "float"
     ) else v
-    if ties not in ("auto", "narrow", "wide"):
-        raise ValueError(f"global_midranks: unknown ties mode {ties!r}")
     keyed = df.withColumn("__key", key)
-    bcast = False
-    if ties == "auto":
-        nparts = df.sparkSession.sparkContext.defaultParallelism
-        probe = (
-            keyed.groupBy("__key")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .agg(
-                F.max("__c").alias("mx"),
-                F.sum("__c").alias("n"),
-                F.count(F.lit(1)).alias("ndv"),
-            )
-            .collect()[0]
-        )
-        mx, n = probe["mx"] or 0, probe["n"] or 0
-        if mx * nparts > 2 * n:
-            ties = "wide"
-            # the probe knows the exact distinct count: hint broadcast
-            # while the midrank table provably fits (~32 B/row ≪ the
-            # 64 MB threshold); past that, plain join + AQE skew split.
-            bcast = (probe["ndv"] or 0) <= 2_000_000
-        else:
-            ties = "narrow"
-    elif ties == "wide":
-        # explicit wide = caller asserts heavy ties, i.e. |distinct| ≪
-        # |rows| — the midrank table is broadcast by contract (a plain
-        # equi-join would re-co-locate the hot value's rows on one task,
-        # the exact hazard this mode exists to avoid).
-        bcast = True
-    if ties == "wide":
-        dv = keyed.groupBy("__key").agg(F.count(F.lit(1)).alias("__c"))
-        pref = global_prefix_sum(dv, "__key", ["__c"])
-        mid = pref.select(
-            F.col("__key").alias("__mkey"),
-            (2 * (F.col("__c_cum") - F.col("__c")) + F.col("__c") + 1)
-            .cast("long")
-            .alias(out_col),
-        )
-        if bcast:
-            mid = F.broadcast(mid)
-        # null-safe equi-join keeps NULL rows ranked, matching the
-        # in-place path (rank() places NULLs first and counts them);
-        # NaN matches NaN under Spark join equality, and ±0.0 is
-        # already normalized into __key on both sides.
-        return keyed.join(
-            mid, F.col("__key").eqNullSafe(F.col("__mkey"))
-        ).drop("__key", "__mkey")
     part = (
         keyed
         .repartitionByRange(F.col("__key"))
@@ -376,3 +293,19 @@ def global_running(
         )
         drop += ["__rn_local", "__cnt__off"]
     return out.drop(*drop)
+
+
+def rate_limit(df: DataFrame, limit: int = 3) -> DataFrame:
+    """Per-(user, hour) feed throttle: the first ``limit`` events by
+    (ts, event_id) — one window shuffle (WindowGroupLimit pushes the filter
+    down)."""
+    return (
+        df.select(
+            "user_id", F.date_trunc("hour", "ts").alias("hour"), "event_id", "ts"
+        )
+        .withColumn("__rn", F.row_number().over(
+            W.partitionBy("user_id", "hour").orderBy(F.col("ts").asc(), F.col("event_id").asc())
+        ))
+        .filter(F.col("__rn") <= limit)
+        .drop("__rn")
+    )

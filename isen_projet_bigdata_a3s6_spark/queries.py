@@ -3303,7 +3303,7 @@ def q103_nested_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Feed rate limiting and time-series interpolation — ingestion-pipeline
-# operators; the streaming rate-limiter twin lives in streaming/stateful.py
+# operators
 # ---------------------------------------------------------------------------
 @register(
     "q104_rate_limit",
@@ -3318,12 +3318,11 @@ def q103_nested_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q104_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(user, hour) feed throttle: admit the first 3 events in arrival
-    order — WindowGroupLimit batch form; the streaming stateful twin
-    (applyInPandasWithState counter) is equivalence-tested against this."""
-    from .streaming.stateful import batch_rate_limit
+    order (WindowGroupLimit)."""
+    from .operators.windows import rate_limit
 
     e = load_table(spark, sf_dir, "events")
-    return batch_rate_limit(e, limit=3)
+    return rate_limit(e, limit=3)
 
 
 @register(
@@ -9440,7 +9439,7 @@ def q225_unigram_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 13: transformWithState, watermark-sizing diagnostics, restart
+# Wave 13: stateful user profiles, watermark-sizing diagnostics, restart
 # recovery, k-core decomposition
 # ---------------------------------------------------------------------------
 @register(
@@ -9454,22 +9453,17 @@ def q225_unigram_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q226_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user profile via transformWithStateInPandas (streaming/tws.py —
-    Spark 4's named-state-variable stateful API on the RocksDB store):
-    ValueState totals + MapState per-type counts accumulated across 4
+    """Per-user profile as a stateful stream (streaming/stateful.py::
+    user_profiles, ``applyInPandasWithState``): running event count,
+    value-micros sum and distinct event types accumulated across 4
     micro-batches, Update-mode emissions, final profile per user. The
     oracle is the batch twin — state surviving batch boundaries is exactly
-    what makes them equal. The TWS runner needs protobuf, which this
-    container lacks: the operator gates on the import and runs an
-    applyInPandasWithState fallback with identical semantics (see
-    streaming/tws.py::_tws_available — same sanctioned env-block handling
-    as the multimodal codecs), so the oracle exercises the fallback here
-    and the TWS path on a real cluster."""
+    what makes them equal."""
     import os
 
-    from .streaming.tws import tws_user_profile
+    from .streaming.stateful import user_profiles
 
-    return tws_user_profile(
+    return user_profiles(
         spark, os.path.join(sf_dir, "events.parquet"), n_batches=4
     )
 
@@ -9543,7 +9537,7 @@ def q227_event_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q228_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly-once across a streaming query RESTART (streaming/tws.py::
+    """Exactly-once across a streaming query RESTART (streaming/recovery.py::
     restart_recovery_counts): half the feed is consumed into a
     checkpointed parquet sink, the query STOPS, the rest of the feed
     arrives, and a new query object resumes from the same checkpoint. The
@@ -9553,7 +9547,7 @@ def q228_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor loss, code redeploys, and cluster moves."""
     import os
 
-    from .streaming.tws import restart_recovery_counts
+    from .streaming.recovery import restart_recovery_counts
 
     return restart_recovery_counts(spark, os.path.join(sf_dir, "events.parquet"))
 
@@ -12057,12 +12051,10 @@ def q260_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (midranks/global_midranks both still COUNT null rows into every
     # c_less, exactly as the NULL group flowed through the prefix scan)
     ranked = (
-        # ties="narrow" asserts the near-unique contract for price
-        # (583k distinct values over 600k rows at sf0.1; tie groups stay
-        # ~rows/|distinct| at every SF, far under a partition) and skips
-        # the auto tie probe's extra pass; the wide fallback exists for
-        # constant-heavy columns (operators/windows.py::global_midranks).
-        global_midranks(r, "yv", "w", ties="narrow")
+        # price meets global_midranks' near-unique contract (583k
+        # distinct values over 600k rows at sf0.1; tie groups stay
+        # ~rows/|distinct| at every SF, far under a partition)
+        global_midranks(r, "yv", "w")
         .filter(F.col("yv").isNotNull() & F.col("x").isNotNull())
         .join(F.broadcast(midranks(r, "x", "u")), "x")
     )

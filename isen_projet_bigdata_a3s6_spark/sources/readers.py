@@ -70,12 +70,6 @@ def read_csv(
     return reader.csv(path)
 
 
-def read_binary_files(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """S3: binary scan (reference ``readPNG`` at R_groupe4.R:653) →
-    columns (path, modificationTime, length, content:binary)."""
-    return spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet_ns_safe(spark, os.path.join(sf_dir, f"{name}.parquet"))
 

@@ -6,14 +6,14 @@ the selected columns, then one pass of moment sums.
 
 Implementation detail that matters for both the oracle gate and 100 TB
 reproducibility: all moment sums run in DECIMAL (exact, associative), the
-final cov/corr arithmetic is a handful of double ops on the driver-visible
+final cov/corr arithmetic is a handful of double ops on the single
 aggregate row — so results are bit-identical across partitionings and match
 DuckDB exactly, unlike a plain double ``corr()`` whose accumulation order
 varies run-to-run.
 
-One job computes the full p×p matrix: p means + p(p+1)/2 cross sums in a
-single ``agg`` — one scan, map-side combined, no shuffle beyond the final
-single-row reduce.
+One aggregation computes every requested pair: p sums + p(p+1)/2 cross
+sums in a single ``agg`` — one scan, map-side combined, no shuffle beyond
+the final single-row reduce.
 """
 
 from __future__ import annotations
@@ -37,46 +37,6 @@ def _moment_aggs(cols: list[str], scale: int = 8):
             .alias(f"s_{a}__{b}")
         )
     return aggs
-
-
-def moment_sums(df: DataFrame, cols: list[str]) -> dict[str, float]:
-    """Single-pass exact moment sums over complete observations."""
-    clean = df.dropna(subset=cols)
-    row = clean.agg(*_moment_aggs(cols)).collect()[0].asDict()
-    return row
-
-
-def _cross(row: dict, a: str, b: str) -> float:
-    key = f"s_{a}__{b}" if f"s_{a}__{b}" in row else f"s_{b}__{a}"
-    return row[key]
-
-
-def covariance_matrix(df: DataFrame, cols: list[str]) -> dict[tuple[str, str], float]:
-    """M1: sample covariance matrix (complete-obs)."""
-    row = moment_sums(df, cols)
-    n = row["n"]
-    out = {}
-    for a in cols:
-        for b in cols:
-            cov = (_cross(row, a, b) - row[f"s_{a}"] * row[f"s_{b}"] / n) / (n - 1)
-            out[(a, b)] = cov
-    return out
-
-
-def correlation_matrix(df: DataFrame, cols: list[str]) -> dict[tuple[str, str], float]:
-    """M2: Pearson correlation matrix (complete-obs)."""
-    row = moment_sums(df, cols)
-    n = row["n"]
-
-    def stdev_term(c: str) -> float:
-        return (n * _cross(row, c, c) - row[f"s_{c}"] ** 2) ** 0.5
-
-    out = {}
-    for a in cols:
-        for b in cols:
-            num = n * _cross(row, a, b) - row[f"s_{a}"] * row[f"s_{b}"]
-            out[(a, b)] = num / (stdev_term(a) * stdev_term(b))
-    return out
 
 
 def pairwise_stats_df(df: DataFrame, pairs: list[tuple[str, str]], scale: int = 4) -> DataFrame:

@@ -3,9 +3,8 @@
 Reference: ``chisq.test(table(a, b))`` (R_groupe4.R:836-841, 882-900) and
 ``aov(y ~ g)`` (R_groupe4.R:873-874). Both reduce to grouped counts/sums —
 two-phase hash aggregation, one shuffle, any scale — with the test statistic
-computed from the (tiny) aggregate either as a second Spark aggregate (the
-oracle-checkable path) or driver-side with a p-value from
-``stats.distributions``.
+computed from the (tiny) aggregate as a second Spark aggregate, so the
+result is a DataFrame the DuckDB twin checks exactly.
 """
 
 from __future__ import annotations
@@ -14,7 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import dec, round6
-from .distributions import chi2_sf, f_sf
 
 
 def chi_square_df(df: DataFrame, a: str, b: str) -> DataFrame:
@@ -61,16 +59,6 @@ def chi_square_df(df: DataFrame, a: str, b: str) -> DataFrame:
         ).alias("chi2"),
         ((F.col("ra") - 1) * (F.col("cb") - 1)).cast("long").alias("dof"),
     )
-
-
-def chi_square_test(df: DataFrame, a: str, b: str) -> dict[str, float]:
-    """M3 with p-value (driver-side tail function)."""
-    row = chi_square_df(df, a, b).collect()[0]
-    return {
-        "chi2": row["chi2"],
-        "dof": row["dof"],
-        "p_value": chi2_sf(row["chi2"], row["dof"]),
-    }
 
 
 def chi_square_oracle_sql(table: str, a: str, b: str) -> str:
@@ -127,15 +115,6 @@ def anova_oneway_df(df: DataFrame, value: str, group: str, scale: int = 4) -> Da
         (F.col("n") - F.col("k")).cast("long").alias("df_within"),
         round6(fstat).alias("f_stat"),
     )
-
-
-def anova_oneway(df: DataFrame, value: str, group: str) -> dict[str, float]:
-    """M5 with p-value."""
-    row = anova_oneway_df(df, value, group).collect()[0]
-    return {
-        **row.asDict(),
-        "p_value": f_sf(row["f_stat"], row["df_between"], row["df_within"]),
-    }
 
 
 def anova_oneway_oracle_sql(table: str, value: str, group: str, scale: int = 4) -> str:

@@ -4,9 +4,9 @@ Reference: ``lm(age_estim ~ tronc_diam)`` + predict + RSE + R²
 (R_groupe4.R:983-996). Simple OLS has an exact closed form from the same
 moment sums the descriptive module computes — slope = S_xy/S_xx (centered),
 intercept = ȳ − slope·x̄ — so it is oracle-checkable and runs as ONE
-aggregation pass at any scale. Multiple OLS with inference lives in ``ml``
-(Spark ML, normal solver); this module also provides the inferential pieces
-for the simple model (std errors, t, p) from the same sums.
+aggregation pass at any scale. Multiple OLS with inference (coefficients,
+std errors, t values) is :func:`multiple_ols_closed_form`, from the same
+kind of exact moment sums.
 """
 
 from __future__ import annotations
@@ -15,12 +15,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import dec, round6
-from .distributions import t_sf
 
 
 def _ols_moments_df(df: DataFrame, y: str, x: str, scale: int = 4) -> DataFrame:
-    """One-pass exact moment sums (n, Σx, Σy, Σx², Σy², Σxy) — the shared
-    input of both the display fit and the inferential summary."""
+    """One-pass exact moment sums (n, Σx, Σy, Σx², Σy², Σxy)."""
     clean = df.dropna(subset=[x, y])
     return clean.agg(
         F.count(F.lit(1)).alias("n"),
@@ -78,42 +76,6 @@ def simple_ols_oracle_sql(table: str, y: str, x: str, scale: int = 4, where: str
            CAST(n AS BIGINT) AS n
     FROM d
     """
-
-
-def simple_ols_inference(df: DataFrame, y: str, x: str, scale: int = 4) -> dict[str, float]:
-    """M6 inferential summary (slope std-error, t, p — R ``summary.lm``
-    analog). ONE aggregation pass: every statistic derives from the same
-    unrounded moment sums (no second scan, no rounding error feeding into
-    t/p); display keys are rounded only at output, matching
-    :func:`simple_ols_df`."""
-    m = _ols_moments_df(df, y, x, scale).collect()[0]
-    n = m["n"]
-    nf = float(n)
-    ssxx = m["sxx"] - m["sx"] * m["sx"] / nf
-    ssyy = m["syy"] - m["sy"] * m["sy"] / nf
-    ssxy = m["sxy"] - m["sx"] * m["sy"] / nf
-    slope = ssxy / ssxx
-    intercept = (m["sy"] - slope * m["sx"]) / nf
-    r2 = (ssxy * ssxy) / (ssxx * ssyy)
-    sse = ssyy - slope * ssxy
-    rse = (sse / (nf - 2)) ** 0.5
-    se_slope = rse / ssxx**0.5
-    t = slope / se_slope
-    return {
-        "slope": round(slope, 6),
-        "intercept": round(intercept, 6),
-        "r2": round(r2, 6),
-        "rse": round(rse, 6),
-        "n": n,
-        "se_slope": se_slope,
-        "t_slope": t,
-        "p_slope": 2.0 * t_sf(abs(t), n - 2),
-    }
-
-
-def predict_simple(df: DataFrame, slope: float, intercept: float, x: str, out: str = "pred") -> DataFrame:
-    """M6 point prediction (reference ``predict(modele, newdata)``)."""
-    return df.withColumn(out, F.lit(slope) * F.col(x) + F.lit(intercept))
 
 
 # ---------------------------------------------------------------------------

@@ -9,14 +9,11 @@ a stream-stream inner join must buffer both streams forever; with it, state
 is O(rate × bound) regardless of stream length — the 100 TB/day posture.
 
 Output mode is append (the only mode stream-stream joins support); the demo
-drains a file source into a memory sink so the result is a plain DataFrame
-sharing its DuckDB oracle with the batch twin.
+drains a file source into a memory sink so the result is a plain DataFrame,
+checked against a DuckDB self-join (q82's oracle).
 """
 
 from __future__ import annotations
-
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -160,32 +157,3 @@ def stream_stream_left_outer_join(
     finally:
         q.stop()
     return spark.table(query_name)
-
-
-def batch_time_bounded_join(
-    df: DataFrame,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    bound: str = "1 hour",
-) -> DataFrame:
-    """Batch twin of :func:`stream_stream_time_bounded_join` — identical
-    semantics as an ordinary self-join, for equivalence tests and as the
-    oracle-shaped form."""
-    left = df.filter(F.col("event_type") == left_type).select(
-        F.col("event_id").alias("l_event_id"),
-        F.col("user_id").alias("l_user_id"),
-        F.col("ts").alias("l_ts"),
-    )
-    right = df.filter(F.col("event_type") == right_type).select(
-        F.col("event_id").alias("r_event_id"),
-        F.col("user_id").alias("r_user_id"),
-        F.col("ts").alias("r_ts"),
-        F.col("value").alias("r_value"),
-    )
-    return left.join(
-        right,
-        F.expr(
-            f"l_user_id = r_user_id AND r_ts >= l_ts AND r_ts <= l_ts + INTERVAL {bound}"
-        ),
-        "inner",
-    ).select("l_event_id", "r_event_id", "l_user_id", "l_ts", "r_ts", "r_value")

@@ -1,16 +1,16 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``
+"""Custom stateful streaming operators via ``applyInPandasWithState``
 (SURVEY §2.12 — the escape hatch for operators Spark's windowed
 aggregations can't express).
 
-Demonstrated operator: per-user running profile — event count, running
-value sum, and last-seen timestamp — maintained incrementally across
-micro-batches with explicit state. The same callable serves batch
-(``applyInPandas``) and streaming (``applyInPandasWithState``), proving the
-operator's logic is execution-mode agnostic.
+- :func:`user_profiles` — per-user running profile (event count, value
+  micros sum, distinct event types) kept in one state tuple per user
+  across micro-batches (q226).
+- :func:`streaming_ewma` — the per-user EWMA recurrence continued across
+  micro-batches from one scalar of state per key (q152).
 
 Scale posture: state is keyed by user and lives in the state store
 (RocksDB/HDFS-backed on a cluster); each micro-batch touches only the keys
-present in the batch. Timeouts prune idle keys.
+present in the batch.
 """
 
 from __future__ import annotations
@@ -21,11 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..scratch import scratch_dir, stage_parquet_files
+from ..scratch import scratch_dir
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "user_id long, n_events long, sum_value double, last_ts timestamp"
-STATE_SCHEMA = "n long, s double, last_ts timestamp"
 
 
 def _update_profile(
@@ -33,160 +30,76 @@ def _update_profile(
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        n, s, last_ts = state.get
-    else:
-        n, s, last_ts = 0, 0.0, None
+    n, sv, types = state.get if state.exists else (0, 0, [])
+    types = list(types)
     for pdf in pdfs:
         n += len(pdf)
-        s += float(pdf["value"].sum())
-        batch_max = pdf["ts"].max()
-        last_ts = batch_max if last_ts is None else max(last_ts, batch_max)
-    state.update((n, s, last_ts))
+        # value has ≤4 dp (the q71 decimal convention): micros-exact
+        sv += int(round(float(pdf["value"].sum()) * 10000))
+        for t in pdf["event_type"].unique():
+            if t not in types:
+                types.append(t)
+    state.update((n, sv, types))
     yield pd.DataFrame(
-        [{"user_id": user_id, "n_events": n, "sum_value": s, "last_ts": last_ts}]
+        {
+            "user_id": [key[0]],
+            "n_events": [n],
+            "sum_micros": [sv],
+            "n_types": [len(types)],
+        }
     )
 
 
-def streaming_user_profiles(
+def user_profiles(
     spark: SparkSession,
     parquet_path: str,
-    query_name: str = "user_profiles",
+    n_batches: int = 4,
+    query_name: str = "user_profiles_out",
 ) -> DataFrame:
-    """Run the stateful profile operator as a real stream over the events
-    parquet (one file per micro-batch via maxFilesPerTrigger), returning the
-    final materialized state. Update-mode output: last row per user wins."""
-    from ..sources.readers import read_stream_ns_safe
+    """Run the profile operator over the events feed split into
+    ``n_batches`` micro-batches (maxFilesPerTrigger=1), proving state
+    survives across batches. Emissions are per-batch running totals in
+    Update mode; the returned frame is the FINAL profile per user (the
+    emission with the max event count — counts are monotone)."""
+    from ..sources.readers import read_parquet_ns_safe
 
-    stage = scratch_dir(spark, "stateful_src")
-    stage_parquet_files(parquet_path, stage)
-    stream = read_stream_ns_safe(spark, parquet_path, stage, maxFilesPerTrigger=1)
-    profiles = (
-        stream.select("user_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_profile,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    batch = read_parquet_ns_safe(spark, parquet_path).select(
+        "event_id", "user_id", "event_type", "value"
     )
-    q = (
-        profiles.writeStream.outputMode("update")
+    stage = scratch_dir(spark, "profile_src")
+    batch.repartition(n_batches).write.mode("overwrite").parquet(stage)
+    stream = (
+        spark.readStream.schema(batch.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+    )
+    out = stream.groupBy("user_id").applyInPandasWithState(
+        _update_profile,
+        outputStructType="user_id BIGINT, n_events BIGINT, sum_micros BIGINT, n_types BIGINT",
+        stateStructType="n BIGINT, sv BIGINT, types ARRAY<STRING>",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    sq = (
+        out.writeStream.outputMode("update")
         .format("memory")
         .queryName(query_name)
         .start()
     )
     try:
-        q.processAllAvailable()
+        sq.processAllAvailable()
     finally:
-        q.stop()
-    # update mode appends one row per key per batch: keep the last per user
-    from pyspark.sql import Window as W
-
-    out = spark.table(query_name)
-    w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
+        sq.stop()
     return (
-        out.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def batch_user_profiles(df: DataFrame) -> DataFrame:
-    """The batch twin: same result as the streaming operator, as a plain
-    aggregation (used as its correctness oracle)."""
-    from ..functions.scalar import round6
-
-    return df.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        round6(F.sum("value")).alias("sum_value"),
-        F.max("ts").alias("last_ts"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Per-key rate limiter — the training-data-feed throttle (keep at most N
-# events per key per window), as a second stateful operator
-# ---------------------------------------------------------------------------
-RATE_OUTPUT_SCHEMA = "user_id long, hour timestamp, event_id long, ts timestamp"
-RATE_STATE_SCHEMA = "n long"
-
-
-def _make_rate_limiter(limit: int):
-    def _rate_limit(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        user_id, hour = key
-        n = state.get[0] if state.exists else 0
-        out = []
-        for pdf in pdfs:
-            # deterministic admission order inside the micro-batch
-            pdf = pdf.sort_values(["ts", "event_id"])
-            take = max(limit - n, 0)
-            kept = pdf.head(take)
-            n += len(pdf)  # count all arrivals; admitted = first `limit`
-            if len(kept):
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "user_id": user_id,
-                            "hour": hour,
-                            "event_id": kept["event_id"].values,
-                            "ts": kept["ts"].values,
-                        }
-                    )
-                )
-        state.update((n,))
-        yield from out or [pd.DataFrame(columns=["user_id", "hour", "event_id", "ts"])]
-
-    return _rate_limit
-
-
-def streaming_rate_limit(
-    spark: SparkSession,
-    parquet_path: str,
-    limit: int = 3,
-    query_name: str = "rate_limit_out",
-) -> DataFrame:
-    """Admit at most ``limit`` events per (user, hour) in event arrival
-    order — the feed throttle a large-scale ingestion pipeline puts in front
-    of expensive per-document processing. State per key is a single counter;
-    keys stop mutating one watermark past their hour (timeout would prune
-    them in a long-lived job)."""
-    from ..sources.readers import read_stream_ns_safe
-
-    stage = scratch_dir(spark, "ratelimit_src")
-    stage_parquet_files(parquet_path, stage)
-    stream = read_stream_ns_safe(spark, parquet_path, stage)
-    limited = (
-        stream.select(
-            "user_id", F.date_trunc("hour", "ts").alias("hour"), "event_id", "ts"
+        spark.table(query_name)
+        .groupBy("user_id")
+        .agg(
+            F.max_by(
+                F.struct("n_events", "sum_micros", "n_types"), "n_events"
+            ).alias("s")
         )
-        .groupBy("user_id", "hour")
-        .applyInPandasWithState(
-            _make_rate_limiter(limit),
-            outputStructType=RATE_OUTPUT_SCHEMA,
-            stateStructType=RATE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        .select("user_id", "s.n_events", "s.sum_micros", "s.n_types")
     )
-    q = (
-        limited.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
 
 
 _EWMA_OUTPUT_SCHEMA = "event_id long, user_id long, ts timestamp, ewma double"
@@ -289,20 +202,3 @@ def streaming_ewma(
     finally:
         q.stop()
     return spark.table(query_name)
-
-
-def batch_rate_limit(df: DataFrame, limit: int = 3) -> DataFrame:
-    """Batch twin: first ``limit`` events per (user, hour) by (ts, event_id)
-    — one window shuffle (WindowGroupLimit pushes the filter down)."""
-    from pyspark.sql import Window as W
-
-    return (
-        df.select(
-            "user_id", F.date_trunc("hour", "ts").alias("hour"), "event_id", "ts"
-        )
-        .withColumn("__rn", F.row_number().over(
-            W.partitionBy("user_id", "hour").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-        ))
-        .filter(F.col("__rn") <= limit)
-        .drop("__rn")
-    )

@@ -227,37 +227,6 @@ def _stage_stream(
     return read_stream_ns_safe(spark, parquet_path, stage)
 
 
-def streaming_dedup_counts(
-    spark: SparkSession,
-    parquet_path: str,
-    keys: list[str] = ("user_id", "event_type"),
-    watermark: str = "1 day",
-    query_name: str = "stream_dedup_out",
-) -> DataFrame:
-    """Streaming dropDuplicatesWithinWatermark: emits the first event per
-    key within the watermark horizon, counts per event_type. State is
-    bounded by the watermark (keys expire), unlike a batch distinct.
-    Batch twin for correctness: dropDuplicates(keys) + count."""
-    stream = _stage_stream(spark, parquet_path, "stream_dedup_")
-    deduped = (
-        stream.withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(list(keys))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_first_events"))
-    )
-    q = (
-        deduped.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
-
-
 def streaming_dedup_keys(
     spark: SparkSession,
     parquet_path: str,
@@ -283,8 +252,6 @@ def streaming_dedup_keys(
     final batch, so no state expires mid-run and the emitted set equals
     batch ``DISTINCT`` — the oracle.
     """
-    import tempfile
-
     stream = _stage_stream(spark, parquet_path, "stream_dedup_src_")
     deduped = (
         stream.withWatermark(ts_col, watermark)

@@ -4,7 +4,6 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from isen_projet_bigdata_a3s6_spark.functions.dedup import (
-    dedup_exact,
     minhash_dedup_pairs,
     ngram_jaccard_pairs,
     simhash_dedup_pairs,
@@ -29,12 +28,6 @@ def _docs(spark):
         (5, "another unrelated document mentioning parquet and columnar io"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_dedup_exact_keeps_lowest_id(spark):
-    d = dedup_exact(_docs(spark), "text", "doc_id")
-    ids = sorted(r["doc_id"] for r in d.collect())
-    assert ids == [1, 3, 4, 5]
 
 
 def test_minhash_finds_near_dups(spark):
@@ -86,10 +79,7 @@ def test_lsh_topk_recall_at_least_half(spark, sf_dir):
 
 
 def test_connected_components_transitive(spark):
-    from isen_projet_bigdata_a3s6_spark.functions.dedup import (
-        connected_components,
-        dedup_transitive,
-    )
+    from isen_projet_bigdata_a3s6_spark.functions.dedup import connected_components
 
     # chain 1-2, 2-3 (transitive cluster {1,2,3}), island 7-8
     pairs = spark.createDataFrame(
@@ -97,9 +87,6 @@ def test_connected_components_transitive(spark):
     )
     comp = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
-    df = spark.createDataFrame([(i,) for i in (1, 2, 3, 5, 7, 8)], "doc_id long")
-    kept = sorted(r["doc_id"] for r in dedup_transitive(df, pairs, "doc_id").collect())
-    assert kept == [1, 5, 7]
 
 
 def test_cosine_topk_arrow_equals_jvm(spark, sf_dir):

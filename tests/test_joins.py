@@ -111,12 +111,8 @@ def test_knn_grid_exact_matches_broadcast_on_driver_data(spark, sf_dir):
     assert got_bc == got_gr
 
 
-def test_merge_upsert_and_scd2(spark):
-    from isen_projet_bigdata_a3s6_spark.operators.merge import (
-        merge_delete,
-        merge_upsert,
-        scd2_apply,
-    )
+def test_merge_upsert(spark):
+    from isen_projet_bigdata_a3s6_spark.operators.merge import merge_upsert
 
     target = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
@@ -124,22 +120,6 @@ def test_merge_upsert_and_scd2(spark):
     updates = spark.createDataFrame([(2, "B"), (4, "d")], "k long, v string")
     merged = {(r["k"], r["v"]) for r in merge_upsert(target, updates, "k").collect()}
     assert merged == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}
-    deleted = {r["k"] for r in merge_delete(target, updates.select("k"), "k").collect()}
-    assert deleted == {1, 3}
-
-    dim = spark.createDataFrame(
-        [(1, "x", "2024-01-01 00:00:00", None, True)],
-        "k long, attr string, valid_from string, valid_to string, is_current boolean",
-    ).selectExpr(
-        "k", "attr", "CAST(valid_from AS TIMESTAMP) valid_from",
-        "CAST(valid_to AS TIMESTAMP) valid_to", "is_current",
-    )
-    upd = spark.createDataFrame(
-        [(1, "y", "2024-06-01 00:00:00")], "k long, attr string, valid_from string"
-    ).selectExpr("k", "attr", "CAST(valid_from AS TIMESTAMP) valid_from")
-    out = scd2_apply(dim, upd, "k", "valid_from").collect()
-    by_attr = {r["attr"]: (r["valid_to"] is not None, r["is_current"]) for r in out}
-    assert by_attr == {"x": (True, False), "y": (False, True)}
 
 
 def test_snapshot_diff_classification(spark):

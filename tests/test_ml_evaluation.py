@@ -13,7 +13,7 @@ from isen_projet_bigdata_a3s6_spark.ml.evaluation import (
     fit_glm_binomial,
     hash_split,
     modulo_split,
-    regression_metrics,
+    train_test_ols_eval,
 )
 
 
@@ -48,15 +48,26 @@ def test_classification_metrics_match_evaluator(scored_clf):
 
 
 def test_regression_metrics_match_evaluator(spark):
+    """q79's train/test evaluation (exact-sum R²/RMSE on the held-out
+    split) against Spark ML's RegressionEvaluator on the same split and
+    the same fitted line."""
     from pyspark.ml.evaluation import RegressionEvaluator
 
-    rows = [(i, float(i) * 0.5 + 3.0, float(i) * 0.5 + 3.0 + ((i % 5) - 2) * 0.25) for i in range(100)]
-    scored = spark.createDataFrame(rows, "id long, label double, pred double")
-    got = regression_metrics(scored, "label", "pred").collect()[0]
-    base = dict(predictionCol="pred", labelCol="label")
-    for metric, key in [("r2", "r2"), ("rmse", "rmse"), ("mae", "mae")]:
+    rows = [(i, float(i % 37), float(i % 37) * 0.5 + 3.0 + ((i % 5) - 2) * 0.25) for i in range(200)]
+    df = spark.createDataFrame(rows, "id long, x double, y double")
+    got = train_test_ols_eval(df, "y", "x", "id", k=5).collect()[0]
+    _, test = modulo_split(df, "id", k=5)
+    scored = test.withColumn(
+        "pred", F.lit(got["slope"]) * F.col("x") + F.lit(got["intercept"])
+    )
+    base = dict(predictionCol="pred", labelCol="y")
+    # slope/intercept are round6'd, so the evaluator scores a line within
+    # 1e-6 of the exact fit: ~1e-5 of metric drift, far below what a wrong
+    # formula (say an n-1 RMSE denominator: ~1e-2 relative) would shift
+    for metric, key in [("r2", "r2_test"), ("rmse", "rmse_test")]:
         want = RegressionEvaluator(metricName=metric, **base).evaluate(scored)
-        assert got[key] == pytest.approx(want, rel=1e-9), metric
+        assert got[key] == pytest.approx(want, abs=1e-4), metric
+    assert (got["n_train"], got["n_test"]) == (160, 40)
 
 
 def test_splits_partition_and_are_deterministic(spark, sf_dir):
@@ -117,23 +128,6 @@ def test_glm_binomial_matches_numpy_irls(spark):
         assert rows[feat]["std_error"] == pytest.approx(se[i], rel=1e-4)
         z = beta[i] / se[i]
         assert rows[feat]["z_value"] == pytest.approx(z, rel=1e-4)
-
-
-def test_stream_stream_join_equals_batch_twin(spark, sf_dir):
-    from isen_projet_bigdata_a3s6_spark.sources.readers import load_table
-    from isen_projet_bigdata_a3s6_spark.streaming.joins import (
-        batch_time_bounded_join,
-        stream_stream_time_bounded_join,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    batch = batch_time_bounded_join(events)
-    stream = stream_stream_time_bounded_join(
-        spark, f"{sf_dir}/events.parquet", query_name="t_stream_join_out"
-    )
-    assert stream.count() == batch.count()
-    assert stream.exceptAll(batch).count() == 0
-    assert batch.exceptAll(stream).count() == 0
 
 
 def test_pca_matches_numpy(spark):

@@ -1,8 +1,13 @@
 """The primary correctness gate, locally: every registered query vs its
 DuckDB oracle at sf0.001 (the same comparison also runs at sf0.01),
-and every registered query emits scalar columns only."""
+every registered query emits scalar columns only, and the package holds
+no code that nothing outside the tests reaches."""
 
 import ast
+import io
+import re
+import tokenize
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -28,6 +33,13 @@ def test_check_query_rejects_non_scalar_columns(spark, sf_dir, monkeypatch):
     )
     res = check_query(spark, "q_nested", sf_dir)
     assert not res.ok and "non-scalar columns ['a']" in str(res)
+
+
+def _is_registered(node):
+    return any(
+        isinstance(dec, ast.Call) and getattr(dec.func, "id", None) == "register"
+        for dec in node.decorator_list
+    )
 
 
 def _registrations():
@@ -63,3 +75,57 @@ def test_register_rejects_duplicate_name():
 
 def test_oracle_keys_subset():
     assert set(registry.oracle_sql()) <= set(registry.queries())
+
+
+_PKG = Path(registry.__file__).parent
+_REPO = _PKG.parent
+# Reached only by tests, each kept pending its own decision: the p-value
+# library (chi2_sf, f_sf, t_sf) and the plan helpers.
+_REACH_EXEMPT = ("plans/", "stats/distributions.py")
+_WORD = re.compile(r"[A-Za-z_]\w*")
+
+
+def _words(src):
+    """(line, identifier) for every name in ``src``: code tokens plus the
+    words of its strings, docstrings and comments."""
+    out = []
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type == tokenize.NAME:
+            out.append((tok.start[0], tok.string))
+        elif tok.type in (tokenize.STRING, tokenize.COMMENT):
+            out += [(tok.start[0], w) for w in _WORD.findall(tok.string)]
+    return out
+
+
+def test_every_package_object_is_reached():
+    """Every module-level function and class of the package is named
+    outside its own definition (own docstring included) in package code,
+    ``__spark_entry__.py``, ``tools/`` or ``.claude/skills/``. Registered
+    queries are reached through the registry. Tests do not count: code
+    that only a test calls is a second mechanism nobody runs."""
+    seen = Counter()
+    defs = []
+    for path in sorted(_PKG.rglob("*.py")):
+        src = path.read_text()
+        words = _words(src)
+        seen.update(w for _, w in words)
+        rel = path.relative_to(_PKG).as_posix()
+        if rel.startswith(_REACH_EXEMPT):
+            continue
+        for node in ast.parse(src).body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) or _is_registered(node):
+                continue
+            own = sum(
+                1 for line, w in words
+                if w == node.name and node.lineno <= line <= node.end_lineno
+            )
+            defs.append((f"{rel}::{node.name}", node.name, own))
+    for path in [_REPO / "__spark_entry__.py", *sorted((_REPO / "tools").rglob("*.py"))]:
+        seen.update(w for _, w in _words(path.read_text()))
+    for path in sorted((_REPO / ".claude" / "skills").rglob("*")):
+        if path.is_file():
+            seen.update(_WORD.findall(path.read_text()))
+    unreached = [qual for qual, name, own in defs if seen[name] <= own]
+    assert not unreached, f"reached by nothing outside tests: {unreached}"

@@ -8,9 +8,8 @@ these tests pin the equivalence arguments at the operator level:
   the overlap) against brute force, on corpora where the bound actually
   prunes (template-heavy: many shared mid-frequency tokens) and on the
   exact-threshold boundary corpora from rounds 7/8;
-- global_midranks' wide (distinct-table) tie fallback against the in-place
-  narrow path, including the 90%-one-value degenerate-skew corpus and the
-  ±0.0 / NaN / NULL edge values;
+- global_midranks against a python midrank reference on the ±0.0 / NaN /
+  NULL tie edge values;
 - dedup_keep_first's float-key canonicalization (SPARK-32110), per ADVICE
   r12: groupBy canonicalizes float grouping keys in the OUTPUT (−0.0 →
   0.0, NaN bit patterns to one canonical NaN) where the old window path
@@ -24,7 +23,6 @@ import math
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _brute_jaccard(docs, t):
@@ -166,7 +164,7 @@ def test_containment_boundary_survives_pair_bound(spark):
 
 
 # ---------------------------------------------------------------------------
-# global_midranks tie modes
+# global_midranks vs a python midrank reference
 # ---------------------------------------------------------------------------
 
 
@@ -190,8 +188,7 @@ def _mixed_values():
     return vals
 
 
-@pytest.mark.parametrize("mode", ["narrow", "wide", "auto"])
-def test_global_midranks_tie_modes_parity(spark, mode):
+def test_global_midranks_tie_modes_parity(spark):
     from isen_projet_bigdata_a3s6_spark.operators.windows import (
         global_midranks,
     )
@@ -200,7 +197,7 @@ def test_global_midranks_tie_modes_parity(spark, mode):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "rid int, v double"
     )
-    got = _midrank_rows(global_midranks(df, "v", "w", ties=mode))
+    got = _midrank_rows(global_midranks(df, "v", "w"))
     # reference: exact midranks computed in python with the same key
     # normalization (NULL first, then values, NaN last; ±0.0 merged)
     def keyof(v):
@@ -220,35 +217,6 @@ def test_global_midranks_tie_modes_parity(spark, mode):
     for rid, _, w in got:
         assert w == expect[rid], (rid, vals[rid], w, expect[rid])
     assert len(got) == len(vals)
-
-
-def test_global_midranks_degenerate_skew_bounded(spark):
-    """90 % of rows share one value: auto must dispatch to the wide path
-    (no tie group ever co-located into one range partition), results must
-    match the narrow path, and no output partition may hold the whole hot
-    tie group."""
-    from isen_projet_bigdata_a3s6_spark.operators.windows import (
-        global_midranks,
-    )
-
-    n = 4000
-    rows = [(i, 42.0 if i % 10 else float(i)) for i in range(n)]
-    df = spark.createDataFrame(rows, "rid int, v double").repartition(8)
-    out_auto = global_midranks(df, "v", "w", ties="auto")
-    out_narrow = global_midranks(df, "v", "w", ties="narrow")
-    a = {(r["rid"], r["w"]) for r in out_auto.collect()}
-    b = {(r["rid"], r["w"]) for r in out_narrow.collect()}
-    assert a == b
-    # bounded per-partition row counts on the auto (wide) path: the hot
-    # tie group (3600 rows) must NOT be funneled into a single partition
-    # the way the narrow path's range exchange does by construction.
-    sizes = [
-        r["c"]
-        for r in out_auto.groupBy(F.spark_partition_id().alias("p"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    ]
-    assert max(sizes) < int(0.9 * n), sizes
 
 
 # ---------------------------------------------------------------------------

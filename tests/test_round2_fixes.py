@@ -1,6 +1,6 @@
 """Round-2 hardening: deterministic salting, grid-exact row preservation,
 CC pointer-jumping/convergence, reliable checkpointing, cache hygiene,
-single-pass OLS inference, knn auto-dispatch."""
+OLS inference, knn auto-dispatch."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -132,13 +132,13 @@ def test_minhash_pairs_lazy_and_cache_released_by_clear(spark):
 
 
 def test_reliable_checkpoint_mode(spark, tmp_path):
-    """With a checkpoint dir configured, cut_lineage takes the reliable
-    checkpoint() path (the fault-tolerant cluster path) end-to-end for CC;
-    without one it stays executor-local. The dir is unset again afterwards
-    so later tests run the default localCheckpoint path."""
+    """With a checkpoint dir configured (Spark's own setCheckpointDir),
+    cut_lineage takes the reliable checkpoint() path (the fault-tolerant
+    cluster path) end-to-end for CC; without one it stays executor-local.
+    The dir is unset again afterwards so later tests run the default
+    localCheckpoint path."""
     from isen_projet_bigdata_a3s6_spark.checkpointing import (
         cut_lineage,
-        ensure_checkpoint_dir,
         reliable_checkpoint_enabled,
     )
     from isen_projet_bigdata_a3s6_spark.functions.dedup import connected_components
@@ -150,7 +150,7 @@ def test_reliable_checkpoint_mode(spark, tmp_path):
 
     jsc = spark.sparkContext._jsc.sc()
     assert not reliable_checkpoint_enabled(spark)
-    assert ensure_checkpoint_dir(spark, str(ckpt))
+    spark.sparkContext.setCheckpointDir(str(ckpt))
     try:
         assert reliable_checkpoint_enabled(spark)
         pairs = spark.createDataFrame(
@@ -174,17 +174,20 @@ def test_reliable_checkpoint_mode(spark, tmp_path):
 
 
 def test_simple_ols_inference_matches_numpy(spark):
+    """Simple-OLS inference (slope std error, t, p) from the closed-form
+    multiple OLS with one regressor, against numpy."""
     import numpy as np
 
+    from isen_projet_bigdata_a3s6_spark.stats.distributions import t_sf
     from isen_projet_bigdata_a3s6_spark.stats.regression import (
+        multiple_ols_closed_form,
         simple_ols_df,
-        simple_ols_inference,
     )
 
     xs = [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0]
     ys = [2.1, 4.3, 5.9, 8.2, 9.8, 12.3, 13.9, 16.4]
     df = spark.createDataFrame(list(zip(xs, ys)), "x double, y double")
-    got = simple_ols_inference(df, "y", "x")
+    got = {r["feature"]: r for r in multiple_ols_closed_form(df, "y", ["x"], []).collect()}
 
     X = np.column_stack([np.ones(len(xs)), xs])
     beta, *_ = np.linalg.lstsq(X, np.array(ys), rcond=None)
@@ -194,13 +197,16 @@ def test_simple_ols_inference_matches_numpy(spark):
     se_slope = rse / ssxx**0.5
     t = beta[1] / se_slope
 
-    assert got["slope"] == pytest.approx(beta[1], abs=1e-6)
-    assert got["intercept"] == pytest.approx(beta[0], abs=1e-6)
-    assert got["se_slope"] == pytest.approx(se_slope, rel=1e-9)
-    assert got["t_slope"] == pytest.approx(t, rel=1e-9)
-    assert 0.0 < got["p_slope"] < 1e-6  # strong linear signal
+    slope = got["x"]
+    assert slope["coefficient"] == pytest.approx(beta[1], abs=1e-9)
+    assert got["intercept"]["coefficient"] == pytest.approx(beta[0], abs=1e-9)
+    assert slope["std_error"] == pytest.approx(se_slope, rel=1e-9)
+    assert slope["t_value"] == pytest.approx(t, rel=1e-9)
+    p_slope = 2.0 * t_sf(abs(slope["t_value"]), len(xs) - 2)
+    assert 0.0 < p_slope < 1e-6  # strong linear signal
 
-    # display keys agree with the DataFrame form (same sums, same rounding)
+    # the display fit agrees (same data, round6)
     disp = simple_ols_df(df, "y", "x").collect()[0]
-    for k in ("slope", "intercept", "r2", "rse"):
-        assert got[k] == pytest.approx(disp[k], abs=1e-6)
+    assert disp["slope"] == pytest.approx(beta[1], abs=1e-6)
+    assert disp["intercept"] == pytest.approx(beta[0], abs=1e-6)
+    assert disp["rse"] == pytest.approx(rse, abs=1e-6)

@@ -160,7 +160,7 @@ ANCHOR_AGES = [
 def test_anchor_mean_median_sd(spark):
     """Anchors: mean age_estim 31.9, median 30, sd 28.5."""
     from isen_projet_bigdata_a3s6_spark.operators.aggregations import summary_stats
-    from isen_projet_bigdata_a3s6_spark.stats.descriptive import covariance_matrix
+    from isen_projet_bigdata_a3s6_spark.stats.descriptive import pairwise_stats_df
 
     # independent computation (pure python) agrees with the anchors
     assert statistics.mean(ANCHOR_AGES) == pytest.approx(31.9, abs=1e-9)
@@ -171,8 +171,10 @@ def test_anchor_mean_median_sd(spark):
     row = summary_stats(df, "age_estim").collect()[0]
     assert float(row["mean_val"]) == pytest.approx(31.9, abs=1e-6)
     assert float(row["median_val"]) == pytest.approx(30.0, abs=1e-6)
-    var = covariance_matrix(df, ["age_estim"])[("age_estim", "age_estim")]
-    # moment sums quantize inputs to 8 decimals -> sd lands within ~1e-6
+    pair = [("age_estim", "age_estim")]
+    var = pairwise_stats_df(df, pair, scale=8).collect()[0]["cov_samp"]
+    # moment sums quantize inputs to 8 decimals and cov is round6'd -> sd
+    # lands within ~1e-6
     assert math.sqrt(var) == pytest.approx(28.5, abs=1e-5)
 
 
@@ -182,7 +184,7 @@ def test_anchor_max_pearson(spark):
     correlation is exactly 0.75 up to float."""
     import numpy as np
 
-    from isen_projet_bigdata_a3s6_spark.stats.descriptive import correlation_matrix
+    from isen_projet_bigdata_a3s6_spark.stats.descriptive import pairwise_stats_df
 
     rng = np.random.default_rng(7)
     n = 500
@@ -203,8 +205,11 @@ def test_anchor_max_pearson(spark):
         "tronc_diam double, age_estim double, haut_tot double, haut_tronc double",
     )
     cols = ["tronc_diam", "age_estim", "haut_tot", "haut_tronc"]
-    corr = correlation_matrix(df, cols)
-    off = {(a, b): v for (a, b), v in corr.items() if a < b}
+    pairs = [(a, b) for a in cols for b in cols if a < b]
+    off = {
+        (r["col_a"], r["col_b"]): r["pearson_r"]
+        for r in pairwise_stats_df(df, pairs, scale=8).collect()
+    }
     (amax, bmax), vmax = max(off.items(), key=lambda kv: abs(kv[1]))
     assert {amax, bmax} == {"tronc_diam", "age_estim"}
     assert vmax == pytest.approx(0.75, abs=1e-6)

@@ -1,5 +1,5 @@
-"""Source operators: binary scan (S3), CSV round-trip (S1/S2), ns-parquet,
-and the reader cache."""
+"""Source operators: CSV round-trip (S1/S2), ns-parquet, and the reader
+cache."""
 
 import os
 
@@ -7,21 +7,10 @@ import pytest
 
 from isen_projet_bigdata_a3s6_spark.sources.readers import (
     load_table,
-    read_binary_files,
     read_csv,
     read_parquet_ns_safe,
 )
 from isen_projet_bigdata_a3s6_spark.sources.writers import write_csv
-
-
-def test_binary_file_scan(spark, tmp_path):
-    (tmp_path / "a.bin").write_bytes(b"\x89PNG-fake")
-    (tmp_path / "b.bin").write_bytes(b"RIFF-fake")
-    df = read_binary_files(spark, str(tmp_path), "*.bin")
-    rows = df.select("path", "length", "content").collect()
-    assert len(rows) == 2
-    assert {os.path.basename(r["path"]) for r in rows} == {"a.bin", "b.bin"}
-    assert all(r["length"] > 0 and bytes(r["content"]) for r in rows)
 
 
 def test_csv_roundtrip(spark, tmp_path):

@@ -14,8 +14,8 @@ from isen_projet_bigdata_a3s6_spark.stats.distributions import (
     t_sf,
 )
 from isen_projet_bigdata_a3s6_spark.stats.inference import (
-    anova_oneway,
-    chi_square_test,
+    anova_oneway_df,
+    chi_square_df,
 )
 from isen_projet_bigdata_a3s6_spark.stats.regression import simple_ols_df
 
@@ -52,7 +52,7 @@ def test_simple_ols_vs_numpy(spark, sf_dir):
 
 def test_anova_vs_numpy(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
-    out = anova_oneway(li, "l_quantity", "l_returnflag")
+    out = anova_oneway_df(li, "l_quantity", "l_returnflag").collect()[0]
     pdf = li.select("l_returnflag", "l_quantity").toPandas()
     groups = [g["l_quantity"].to_numpy() for _, g in pdf.groupby("l_returnflag")]
     all_v = pdf["l_quantity"].to_numpy()
@@ -60,12 +60,14 @@ def test_anova_vs_numpy(spark, sf_dir):
     ssw = sum(((g - g.mean()) ** 2).sum() for g in groups)
     f = (ssb / (len(groups) - 1)) / (ssw / (len(all_v) - len(groups)))
     assert abs(out["f_stat"] - f) < 1e-4
-    assert 0.0 <= out["p_value"] <= 1.0
+    assert out["df_between"] == len(groups) - 1
+    assert out["df_within"] == len(all_v) - len(groups)
+    assert 0.0 <= f_sf(out["f_stat"], out["df_between"], out["df_within"]) <= 1.0
 
 
 def test_chi_square_vs_numpy(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
-    out = chi_square_test(li, "l_returnflag", "l_linestatus")
+    out = chi_square_df(li, "l_returnflag", "l_linestatus").collect()[0]
     pdf = li.select("l_returnflag", "l_linestatus").toPandas()
     ct = pdf.groupby(["l_returnflag", "l_linestatus"]).size().unstack(fill_value=0)
     obs = ct.to_numpy().astype(float)
@@ -75,3 +77,4 @@ def test_chi_square_vs_numpy(spark, sf_dir):
     chi2 = ((obs - exp) ** 2 / exp).sum()
     assert abs(out["chi2"] - chi2) < 1e-4
     assert out["dof"] == (obs.shape[0] - 1) * (obs.shape[1] - 1)
+    assert 0.0 <= chi2_sf(out["chi2"], out["dof"]) <= 1.0

@@ -1,4 +1,4 @@
-"""Streaming: batch/stream equivalence for windows and the custom stateful
+"""Streaming: batch/stream equivalence for windows and the stateful EWMA
 operator."""
 
 import os
@@ -6,10 +6,6 @@ import os
 from pyspark.sql import functions as F
 
 from isen_projet_bigdata_a3s6_spark.sources.readers import load_table
-from isen_projet_bigdata_a3s6_spark.streaming.stateful import (
-    batch_user_profiles,
-    streaming_user_profiles,
-)
 from isen_projet_bigdata_a3s6_spark.streaming.windows import (
     streaming_tumbling_counts,
     tumbling_window_agg,
@@ -27,63 +23,6 @@ def test_streaming_tumbling_equals_batch(spark, sf_dir):
     assert sorted(map(tuple, stream_out.collect())) == sorted(
         map(tuple, batch_out.collect())
     )
-
-
-def test_stateful_profiles_equal_batch(spark, sf_dir):
-    path = os.path.join(sf_dir, "events.parquet")
-    stream_out = streaming_user_profiles(spark, path, query_name="t_profiles")
-    batch_out = batch_user_profiles(load_table(spark, sf_dir, "events"))
-    s = {
-        r["user_id"]: (r["n_events"], round(r["sum_value"], 6), r["last_ts"])
-        for r in stream_out.collect()
-    }
-    b = {
-        r["user_id"]: (r["n_events"], round(r["sum_value"], 6), r["last_ts"])
-        for r in batch_out.collect()
-    }
-    assert s == b
-
-
-def test_streaming_dedup_within_watermark(spark, sf_dir):
-    from isen_projet_bigdata_a3s6_spark.streaming.windows import (
-        streaming_dedup_counts,
-    )
-
-    path = os.path.join(sf_dir, "events.parquet")
-    # the events table spans 30 days; a 40-day watermark keeps every key in
-    # state so the stream result equals a batch distinct-per-key count
-    out = streaming_dedup_counts(
-        spark, path, keys=["user_id", "event_type"], watermark="40 days",
-        query_name="t_sdw",
-    )
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .dropDuplicates(["user_id", "event_type"])
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_first_events"))
-    )
-    s = {(r["event_type"], r["n_first_events"]) for r in out.collect()}
-    b = {(r["event_type"], r["n_first_events"]) for r in batch.collect()}
-    assert s == b
-
-
-def test_streaming_rate_limit_equals_batch(spark, sf_dir):
-    import os
-
-    from isen_projet_bigdata_a3s6_spark.sources.readers import load_table
-    from isen_projet_bigdata_a3s6_spark.streaming.stateful import (
-        batch_rate_limit,
-        streaming_rate_limit,
-    )
-
-    streamed = streaming_rate_limit(
-        spark, os.path.join(sf_dir, "events.parquet"), limit=3,
-        query_name="t_rate_limit",
-    )
-    batch = batch_rate_limit(load_table(spark, sf_dir, "events"), limit=3)
-    s = sorted(map(tuple, streamed.select("user_id", "hour", "event_id").collect()))
-    b = sorted(map(tuple, batch.select("user_id", "hour", "event_id").collect()))
-    assert s == b and len(s) > 0
 
 
 def _stage_time_ordered_files(spark, df, n_splits, tmpdir):

@@ -1,4 +1,4 @@
-"""Wave-13 tests: transformWithState profiles, disorder metrics, restart
+"""Wave-13 tests: stateful user profiles, disorder metrics, restart
 recovery, k-core decomposition."""
 
 from pyspark.sql import functions as F
