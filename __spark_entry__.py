@@ -11,6 +11,7 @@ the thin contract surface.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 from collections.abc import Callable
@@ -26,6 +27,11 @@ from isen_projet_bigdata_a3s6_spark.session import apply_session_contract  # noq
 _PKG_SHIPPED: set[str] = set()
 
 
+def _remove_file(path: str) -> None:
+    with contextlib.suppress(OSError):
+        os.remove(path)
+
+
 def _ensure_pkg_on_workers(spark: SparkSession) -> None:
     """Once per application: apply the engine's session contract
     (``session.SESSION_CONTRACT``: UTC, no TIMESTAMP_NTZ inference, nanos
@@ -33,17 +39,22 @@ def _ensure_pkg_on_workers(spark: SparkSession) -> None:
     Python workers. Workers spawn with the driver JVM's original sys.path —
     when the driver runs outside the repo dir, pandas-UDF closures
     referencing this package fail to unpickle. Shipping the package as a zip
-    via addPyFile fixes every UDF path (geo, multimodal) in any session."""
+    via addPyFile fixes every UDF path (geo, multimodal) in any session.
+    Each application gets its own zip: in local mode executors read it at
+    task time, so a shared path would let two programs running at once ship
+    each other's code or a half-written zip. The zip is removed at exit."""
     key = spark.sparkContext.applicationId
     if key in _PKG_SHIPPED:
         return
     apply_session_contract(spark)
+    import atexit
     import tempfile
     import zipfile
 
-    zpath = os.path.join(tempfile.gettempdir(), "isen_a3s6_pkg.zip")
+    fd, zpath = tempfile.mkstemp(prefix="isen_a3s6_pkg-", suffix=".zip")
+    atexit.register(_remove_file, zpath)
     pkg_dir = os.path.join(_REPO_DIR, "isen_projet_bigdata_a3s6_spark")
-    with zipfile.ZipFile(zpath, "w") as zf:
+    with os.fdopen(fd, "wb") as out, zipfile.ZipFile(out, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for f in files:
                 if f.endswith(".py"):

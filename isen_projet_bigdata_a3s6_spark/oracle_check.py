@@ -17,7 +17,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from .sources.readers import TABLES
+from .sources.readers import DRIVER_FIXTURE_ROOT, TABLES
 
 
 @dataclass
@@ -153,16 +153,6 @@ def compare_frames(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame)
             i, x, y = bad[0]
             res.mismatches.append(f"col {c}: {len(bad)} diffs, first at row {i}: spark={x!r} oracle={y!r}")
     return res
-
-
-# The driver's fixture root: the one path an oracle may legitimately embed
-# (file-provenance oracles reference parquet FILES — views can't carry the
-# filename virtual column). Every such oracle MUST build its path from this
-# constant and every local harness retargets it via retarget_oracle_sql;
-# tests/test_round9_fixes.py asserts no registered oracle embeds any OTHER
-# absolute fixture path, so a drifted literal fails loudly instead of
-# silently skipping retargeting (r08 advisory).
-DRIVER_FIXTURE_ROOT = "/root/testdata/sf0.01"
 
 
 def retarget_oracle_sql(sql: str, sf_dir: str) -> str:

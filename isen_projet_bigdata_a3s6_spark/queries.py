@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from .functions.scalar import round_disp
 from .operators import aggregations as agg
-from .sources.readers import load_table
+from .sources.readers import DRIVER_FIXTURE_ROOT, load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -26,7 +26,6 @@ _QUERIES: dict[str, QueryFn] = {}
 _ORACLE: dict[str, str] = {}
 
 
-from .oracle_check import DRIVER_FIXTURE_ROOT
 from .scratch import scratch_dir as _scratch_dir  # shared per-session scratch
 from .scratch import stage_parquet_files
 

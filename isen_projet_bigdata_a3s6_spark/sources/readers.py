@@ -48,6 +48,16 @@ TABLES = (
     "embeddings",
 )
 
+# The sf0.01 fixture root: the one path an oracle may legitimately embed
+# (file-provenance oracles reference parquet FILES — views can't carry the
+# filename virtual column). Every such oracle MUST build its path from this
+# constant and every local harness retargets it via
+# oracle_check.retarget_oracle_sql; tests/test_round9_fixes.py asserts no
+# registered oracle embeds any OTHER absolute fixture path, so a drifted
+# literal fails loudly instead of silently skipping retargeting. It lives
+# here, not in oracle_check, so that the registry does not import DuckDB.
+DRIVER_FIXTURE_ROOT = "/root/testdata/sf0.01"
+
 
 def read_csv(
     spark: SparkSession,

@@ -6,6 +6,8 @@ no code that nothing outside the tests reaches."""
 import ast
 import io
 import re
+import subprocess
+import sys
 import tokenize
 from collections import Counter
 from pathlib import Path
@@ -71,6 +73,18 @@ def test_register_rejects_duplicate_name():
     with pytest.raises(ValueError, match="already registered"):
         registry.register(name)(lambda s, d: None)
     assert registry.queries()[name] is fn
+
+
+def test_registry_import_leaves_duckdb_out():
+    """DuckDB is the oracle's engine, not the engine's: importing the
+    registry (and the driver contract over it) in a fresh interpreter
+    does not load it."""
+    code = (
+        f"import sys; sys.path.insert(0, {str(Path(__file__).parents[1])!r}); "
+        "import __spark_entry__; print(sorted(m for m in sys.modules if m.split('.')[0] == 'duckdb'))"
+    )
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == "[]"
 
 
 def test_oracle_keys_subset():
