@@ -22,21 +22,21 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scalar import dec, round6
+from ..functions.scalar import round6
+from ..stats.regression import ols_moments
 
 
 # ---------------------------------------------------------------------------
 # deterministic splits
 # ---------------------------------------------------------------------------
-def modulo_split(
-    df: DataFrame, key: Column | str, k: int = 5, test_bucket: int = 0
-) -> tuple[DataFrame, DataFrame]:
-    """(train, test) split on ``key % k == test_bucket`` — deterministic,
-    retry-stable, and expressible in ANSI SQL for oracle checks. ``key``
-    should be an integer surrogate key (or any integer expression)."""
+def modulo_is_test(key: Column | str, k: int = 5, test_bucket: int = 0) -> Column:
+    """The modulo split as a row predicate: true on test rows (``key % k ==
+    test_bucket``), false on train rows, null (neither side) where ``key``
+    is null. Deterministic, retry-stable, and expressible in ANSI SQL for
+    oracle checks. ``key`` should be an integer surrogate key (or any
+    integer expression)."""
     key = F.col(key) if isinstance(key, str) else key
-    is_test = F.pmod(key, F.lit(k)) == F.lit(test_bucket)
-    return df.filter(~is_test), df.filter(is_test)
+    return F.pmod(key, F.lit(k)) == F.lit(test_bucket)
 
 
 def hash_split(
@@ -111,19 +111,6 @@ def classification_metrics(
 # ---------------------------------------------------------------------------
 # oracle-exact train/test regression evaluation
 # ---------------------------------------------------------------------------
-def _moments(df: DataFrame, y: str, x: str, scale: int = 4):
-    """Exact decimal moment sums (shared with stats.regression conventions)."""
-    clean = df.dropna(subset=[x, y])
-    return clean.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec(x, 38, scale)).cast("double").alias("sx"),
-        F.sum(dec(y, 38, scale)).cast("double").alias("sy"),
-        F.sum(dec(x, 18, scale // 2) * dec(x, 18, scale // 2)).cast("double").alias("sxx"),
-        F.sum(dec(y, 18, scale // 2) * dec(y, 18, scale // 2)).cast("double").alias("syy"),
-        F.sum(dec(x, 18, scale // 2) * dec(y, 18, scale // 2)).cast("double").alias("sxy"),
-    )
-
-
 def train_test_ols_eval(
     df: DataFrame,
     y: str,
@@ -139,17 +126,16 @@ def train_test_ols_eval(
     SSE_test = Σy² + a²Σx² + n·b² − 2aΣxy − 2bΣy + 2abΣx expands the
     residual sum through the (exact) test moments, so no order-dependent
     per-row double summation exists anywhere — the result is bit-identical
-    to the SQL twin (:func:`ols_eval_oracle_sql`). Two aggregation passes
-    total (train moments, test moments), each map-side combined.
+    to the SQL twin (:func:`ols_eval_oracle_sql`). One aggregation pass,
+    map-side combined, carries both sides' moments: each sum is conditional
+    on the row's side (:func:`modulo_is_test`), so a row with a null split
+    key is in neither, and an empty side has n 0 and null sums.
     """
-    train, test = modulo_split(df, split_key, k=k, test_bucket=test_bucket)
-    tm = _moments(train, y, x, scale).select(
-        *[F.col(c).alias(f"t_{c}") for c in ["n", "sx", "sy", "sxx", "syy", "sxy"]]
+    is_test = modulo_is_test(split_key, k=k, test_bucket=test_bucket)
+    both = df.dropna(subset=[x, y]).agg(
+        *ols_moments(y, x, scale, where=~is_test, prefix="t_"),
+        *ols_moments(y, x, scale, where=is_test, prefix="e_"),
     )
-    em = _moments(test, y, x, scale).select(
-        *[F.col(c).alias(f"e_{c}") for c in ["n", "sx", "sy", "sxx", "syy", "sxy"]]
-    )
-    both = tm.crossJoin(em)
     tn = F.col("t_n").cast("double")
     ssxx = F.col("t_sxx") - F.col("t_sx") * F.col("t_sx") / tn
     ssxy = F.col("t_sxy") - F.col("t_sx") * F.col("t_sy") / tn

@@ -46,9 +46,14 @@ def knn_join_1nn(
 
     Physical plan: broadcast-nested-loop of the (small) known side against
     probes, then a single ``min_by`` aggregate per probe — no shuffle of the
-    probe side beyond the final per-probe aggregation. Correct whenever the
-    known side fits in a broadcast (the reference's case: ≤10⁴ rows).
-    For big×big, use :func:`knn_join_1nn_grid`.
+    probe side beyond the final per-probe aggregation. Probes stay in the
+    partitions they are read in: :func:`knn_join_1nn_auto` comes here only
+    when |probes|·|known| is small, and then a round-robin exchange plus
+    its extra stage costs more than the nested loop it would spread over
+    the cores (the grid path's residual pass, which may face a large known
+    side, spreads its probes itself). Correct whenever the known side fits
+    in a broadcast (the reference's case: ≤10⁴ rows). For big×big, use
+    :func:`knn_join_1nn_grid_exact`.
 
     Ties on distance break on ``tiebreak`` (ascending) for determinism —
     the reference's ``which.min`` keeps the first index, an ingest-order
@@ -63,14 +68,9 @@ def knn_join_1nn(
         *( [F.col(tiebreak).alias("__tb")] if tiebreak else [] ),
     )
     dist = euclidean_distance(F.col(px), F.col(py), F.col("__kx"), F.col("__ky"))
-    # the cross join multiplies per-row work by |known| — spread probes over
-    # all cores first (single-row-group inputs otherwise scan as ONE task)
-    par = probes.sparkSession.sparkContext.defaultParallelism
-    joined = (
-        probes.repartition(par)
-        .join(F.broadcast(k), how="cross")
-        .withColumn("__dist", dist)
-    )
+    # no repartition of the probes: the work is small (see the docstring),
+    # so one task per input partition beats a round-robin exchange
+    joined = probes.join(F.broadcast(k), how="cross").withColumn("__dist", dist)
     order = F.struct(
         *( [F.col("__dist"), F.col("__tb")] if tiebreak else [F.col("__dist")] )
     )
@@ -300,9 +300,12 @@ def knn_join_1nn_grid_exact(
         # residual probes (worst case: outliers beyond the doubled radius) —
         # the exact broadcast pass keeps the join row-preserving; by this
         # round the residual side is tiny, so the cross-join cost is bounded
+        # spread over the cores: the known side may be large here
+        par = probes.sparkSession.sparkContext.defaultParallelism
         resolved_parts.append(
             knn_join_1nn(
-                remaining, known, probe_id, probe_coords, known_coords,
+                remaining.repartition(par), known, probe_id,
+                probe_coords, known_coords,
                 payload_cols=payload_cols, tiebreak=tiebreak,
             )
         )
@@ -397,8 +400,10 @@ def haversine_knn_1nn(
     ties break on ``tiebreak`` ascending — the q41/q297 doctrine that keeps
     libm trig ULP differences from flipping the winner between engines.
 
-    Correct whenever the known side fits in a broadcast; for big×big use
-    :func:`haversine_knn_1nn_auto` (grid dispatch, same output contract).
+    Probes are not repartitioned, for the reason given in
+    :func:`knn_join_1nn`. Correct whenever the known side fits in a
+    broadcast; for big×big use :func:`haversine_knn_1nn_auto` (grid
+    dispatch, same output contract).
     """
     from ..functions.geo import haversine_km
 
@@ -410,10 +415,8 @@ def haversine_knn_1nn(
         *[F.col(c).alias(f"__p_{c}") for c in payload_cols],
         *([F.col(tiebreak).alias("__tb")] if tiebreak else []),
     )
-    par = probes.sparkSession.sparkContext.defaultParallelism
     joined = (
-        probes.repartition(par)
-        .join(F.broadcast(k), how="cross")
+        probes.join(F.broadcast(k), how="cross")
         .withColumn(
             "__d",
             F.round(
@@ -614,9 +617,12 @@ def haversine_knn_1nn_grid_exact(
             exhausted = False
             break
     if exhausted:
+        # spread over the cores, as in knn_join_1nn_grid_exact
+        par = probes.sparkSession.sparkContext.defaultParallelism
         resolved_parts.append(
             haversine_knn_1nn(
-                remaining, known, probe_id, probe_latlon, known_latlon,
+                remaining.repartition(par), known, probe_id,
+                probe_latlon, known_latlon,
                 payload_cols=payload_cols, dist_col=dist_col,
                 tiebreak=tiebreak, round_to=round_to,
             )

@@ -15,6 +15,18 @@ sessions with it, and ``__spark_entry__`` applies it once per application to
 a host-provided session (:func:`apply_session_contract`). Readers and
 operators never set it.
 
+:func:`get_spark` also turns off PySpark's DataFrame call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled``). With it on, every Column
+function walks the Python stack and sets and clears the JVM's
+``PySparkCurrentOrigin``: about four more py4j round trips per call, which
+is most of the driver work of building a query like q79. It changes no
+result, so it is not in the contract. The cost is that an analysis error
+no longer names the Python line that built the failing expression. PySpark
+reads the conf once per process, when the first Column is built, so it
+takes effect only if set before then: a caller who wants call sites back
+passes ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+"true"}`` to the first :func:`get_spark` of the process.
+
 Most of a fresh session's start and of its first query is the driver JVM
 loading classes. So the driver JVM that :func:`get_spark` launches uses a
 JDK dynamic class-data-sharing (CDS) archive: a session with no archive yet
@@ -288,6 +300,8 @@ def get_spark(
         # exact percentiles are the default for oracle parity; flip to
         # approx at scale via functions.scalar.percentile(exact=False)
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # no Python call site on Column calls (see the module docstring)
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         **SESSION_CONTRACT,
         **(extra_conf or {}),
     }

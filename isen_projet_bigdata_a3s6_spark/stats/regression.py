@@ -11,29 +11,41 @@ kind of exact moment sums.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import dec, round6
 
 
-def _ols_moments_df(df: DataFrame, y: str, x: str, scale: int = 4) -> DataFrame:
-    """One-pass exact moment sums (n, Σx, Σy, Σx², Σy², Σxy)."""
-    clean = df.dropna(subset=[x, y])
-    return clean.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec(x, 38, scale)).cast("double").alias("sx"),
-        F.sum(dec(y, 38, scale)).cast("double").alias("sy"),
-        F.sum(dec(x, 18, scale // 2) * dec(x, 18, scale // 2)).cast("double").alias("sxx"),
-        F.sum(dec(y, 18, scale // 2) * dec(y, 18, scale // 2)).cast("double").alias("syy"),
-        F.sum(dec(x, 18, scale // 2) * dec(y, 18, scale // 2)).cast("double").alias("sxy"),
-    )
+def ols_moments(
+    y: str, x: str, scale: int = 4, where: Column | None = None, prefix: str = ""
+) -> list[Column]:
+    """Exact moment sums (n, Σx, Σy, Σx², Σy², Σxy) as aggregate columns
+    named ``{prefix}n`` ... ``{prefix}sxy``: decimal sums, one cast to double
+    each, so the doubles do not depend on row order. Over the rows where
+    ``where`` holds (all rows when it is None; a null ``where`` counts as
+    false), so one aggregate can carry several row sets. Callers drop the
+    rows with a null ``x`` or ``y`` first."""
+
+    def on(c: Column) -> Column:
+        return c if where is None else F.when(where, c)
+
+    h = scale // 2
+    xh, yh = dec(x, 18, h), dec(y, 18, h)
+    sums = {
+        "sx": dec(x, 38, scale), "sy": dec(y, 38, scale),
+        "sxx": xh * xh, "syy": yh * yh, "sxy": xh * yh,
+    }
+    return [
+        F.count(on(F.lit(1))).alias(f"{prefix}n"),
+        *[F.sum(on(c)).cast("double").alias(prefix + name) for name, c in sums.items()],
+    ]
 
 
 def simple_ols_df(df: DataFrame, y: str, x: str, scale: int = 4) -> DataFrame:
     """M6 as a DataFrame: slope, intercept, r2, rse, n — exact sums,
     deterministic double math, round6."""
-    agg = _ols_moments_df(df, y, x, scale)
+    agg = df.dropna(subset=[x, y]).agg(*ols_moments(y, x, scale))
     n = F.col("n").cast("double")
     ssxx = F.col("sxx") - F.col("sx") * F.col("sx") / n
     ssyy = F.col("syy") - F.col("sy") * F.col("sy") / n

@@ -223,3 +223,14 @@ def test_knn_footer_bound_dispatch_matches_count(spark, tmp_path, planar, thresh
     got = run(probes, known)
     assert got == run(probes_c, known_c)
     assert len(got) == (0 if empty_known else 60)
+
+
+@pytest.mark.parametrize("name", ["q16_knn_1nn", "q297_haversine_knn"])
+def test_small_1nn_leaves_probes_in_place(spark, sf_dir, name):
+    """The broadcast 1-NN path (planar q16, haversine q297 at this size)
+    runs the cross join on the probes as read: no round-robin exchange."""
+    from isen_projet_bigdata_a3s6_spark.queries import queries
+
+    plan = queries()[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert "RoundRobinPartitioning" not in plan, plan

@@ -6,13 +6,15 @@ single-pass aggregate implementations can't drift."""
 
 import numpy as np
 import pytest
+from conftest import duck_rows
 from pyspark.sql import functions as F
 
 from isen_projet_bigdata_a3s6_spark.ml.evaluation import (
     classification_metrics,
     fit_glm_binomial,
     hash_split,
-    modulo_split,
+    modulo_is_test,
+    ols_eval_oracle_sql,
     train_test_ols_eval,
 )
 
@@ -56,7 +58,7 @@ def test_regression_metrics_match_evaluator(spark):
     rows = [(i, float(i % 37), float(i % 37) * 0.5 + 3.0 + ((i % 5) - 2) * 0.25) for i in range(200)]
     df = spark.createDataFrame(rows, "id long, x double, y double")
     got = train_test_ols_eval(df, "y", "x", "id", k=5).collect()[0]
-    _, test = modulo_split(df, "id", k=5)
+    test = df.filter(modulo_is_test("id", k=5))
     scored = test.withColumn(
         "pred", F.lit(got["slope"]) * F.col("x") + F.lit(got["intercept"])
     )
@@ -70,11 +72,64 @@ def test_regression_metrics_match_evaluator(spark):
     assert (got["n_train"], got["n_test"]) == (160, 40)
 
 
+def _ols_eval_pair(spark, rows):
+    """train_test_ols_eval on ``rows`` (id, x, y) and its DuckDB twin
+    (``ols_eval_oracle_sql``) on the same rows, split on id % 5 == 0."""
+    df = spark.createDataFrame(rows, "id long, x double, y double")
+    got = tuple(train_test_ols_eval(df, "y", "x", "id", k=5).collect()[0])
+    values = ", ".join(
+        "(" + ", ".join("NULL" if v is None else repr(v) for v in r) + ")" for r in rows
+    )
+    table = (
+        "(SELECT CAST(id AS BIGINT) AS id, CAST(x AS DOUBLE) AS x,"
+        f" CAST(y AS DOUBLE) AS y FROM (VALUES {values}) v(id, x, y))"
+    )
+    (want,) = duck_rows(ols_eval_oracle_sql(table, "y", "x", split_sql="id", k=5))
+    return got, tuple(want)
+
+
+_LINE = [(i, float(i % 11), float(i % 11) * 2.0 + (i % 3) * 0.5) for i in range(1, 41)]
+
+
+def test_ols_eval_null_split_key_is_in_neither_side(spark):
+    got, want = _ols_eval_pair(spark, _LINE + [(None, 1.0, 2.0), (None, 3.0, 7.0)])
+    assert got == want
+    assert got[4:] == (32, 8)
+
+
+def test_ols_eval_all_train_matches_duckdb(spark):
+    got, want = _ols_eval_pair(spark, [r for r in _LINE if r[0] % 5])
+    assert got == want
+    assert got[4:] == (32, 0) and got[2] is None and got[3] is None
+
+
+def test_ols_eval_drops_null_x_y_before_the_split(spark):
+    got, want = _ols_eval_pair(
+        spark, _LINE + [(5, None, 1.0), (41, 2.0, None), (42, None, None)]
+    )
+    assert got == want
+    assert got[4:] == (32, 8)
+
+
+def test_q79_scans_lineitem_once(spark, sf_dir):
+    """Both sides' moments come from one aggregate over one scan: no second
+    lineitem scan, no cross join of two aggregates."""
+    from isen_projet_bigdata_a3s6_spark.queries import q79_train_test_r2
+
+    plan = q79_train_test_r2(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    scans = [line for line in plan.splitlines() if "FileScan" in line]
+    assert len(scans) == 1 and "lineitem" in scans[0], plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
 def test_splits_partition_and_are_deterministic(spark, sf_dir):
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     n = o.count()
     for split in (
-        lambda d: modulo_split(d, "o_orderkey", k=5),
+        lambda d: (
+            d.filter(~modulo_is_test("o_orderkey", k=5)),
+            d.filter(modulo_is_test("o_orderkey", k=5)),
+        ),
         lambda d: hash_split(d, ["o_orderkey"], test_frac=0.2),
     ):
         train, test = split(o)

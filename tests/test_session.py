@@ -201,3 +201,41 @@ def test_sessions_dump_then_map_the_archive(tmp_path):
     third = _run(env)
     assert third["dumps"] == "False" and third["mapped"] == "False"
     assert archives() == []
+
+
+# The first Column a fresh process builds after get_spark: PySpark reads the
+# call-site conf once, then. ``_capture_call_site`` runs exactly when
+# ``_with_origin`` sets the JVM's PySparkCurrentOrigin, so counting its calls
+# counts those round trips.
+ORIGIN_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.errors import utils
+from pyspark.sql import functions as F
+from isen_projet_bigdata_a3s6_spark import session
+spark = session.get_spark(app_name="origin-test", master="local[1]")
+calls = []
+capture = utils._capture_call_site
+utils._capture_call_site = lambda depth: calls.append(depth) or capture(depth)
+F.col("a") + 1
+print("off", len(calls))
+utils._enable_debugging_cache = True
+F.col("a") + 1
+print("on", len(calls))
+print("done")
+"""
+
+
+def test_get_spark_builds_columns_without_call_site_capture():
+    env = {**os.environ, "SPARK_DRIVER_MEM": "1g", "SPARK_GRAFT_CPUS": "1"}
+    proc = subprocess.run(
+        [sys.executable, "-c", ORIGIN_SCRIPT.format(repo=REPO)],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = proc.stdout.strip().splitlines()
+    assert lines[-1] == "done", proc.stdout[-2000:]
+    out = dict(line.split(" ", 1) for line in lines[:-1] if " " in line)
+    assert out["off"] == "0"
+    # the control: with capture on, the same expression is captured
+    assert int(out["on"]) > 0

@@ -398,6 +398,12 @@ def main() -> int:
         names = [n for n in names if any(n.startswith(p) for p in pref)]
 
     spark = get_spark(app_name="degenerate_sweep")
+    # ship the package to the Python workers, as __spark_entry__ does for
+    # the sessions it is handed: run from outside the checkout, UDF queries
+    # (q45, q68, q226) cannot unpickle their closures otherwise
+    import __spark_entry__
+
+    __spark_entry__._ensure_pkg_on_workers(spark)
 
     if args.mode == "skew":
         return skew_sweep(spark, names, sf_dir, args.base, args.slow_ratio)
