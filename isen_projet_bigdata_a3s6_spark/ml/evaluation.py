@@ -1,20 +1,16 @@
 """ML evaluation parity (SURVEY §2.11 — reference R_groupe4.R:994-996,
-1008-1011: ``summary(lm)`` / ``summary(glm)`` tables, train/test evaluation).
+1008-1011: train/test evaluation).
 
 Design notes for scale:
-- Splits are DETERMINISTIC functions of the row key — a modulo split
-  (SQL-expressible, oracle-checkable) or an xxhash64 split (well-mixed for
-  non-uniform keys). Never ``randomSplit``/``F.rand``: a random split is
-  re-drawn under task retry, so a retried stage can move rows between train
-  and test mid-job.
+- Splits are DETERMINISTIC functions of the row key — a modulo split or a
+  multiplicative-hash split, both SQL-expressible and oracle-checkable.
+  Never ``randomSplit``/``F.rand``: a random split is re-drawn under task
+  retry, so a retried stage can move rows between train and test mid-job.
 - Metrics are single aggregation passes (map-side combined). The
   oracle-exact regression path re-expresses SSE/SST through exact decimal
   moment sums so the scalar math happens once on the driver side of the
   aggregate — bit-identical to the DuckDB twin, no order-dependent double
   summation.
-- GLM summaries come from ``GeneralizedLinearRegression`` (IRLS, like R's
-  ``glm``), which exposes coefficient std errors / z / p — the R
-  ``summary(glm)`` table that plain ``LogisticRegression`` doesn't provide.
 """
 
 from __future__ import annotations
@@ -39,17 +35,6 @@ def modulo_is_test(key: Column | str, k: int = 5, test_bucket: int = 0) -> Colum
     return F.pmod(key, F.lit(k)) == F.lit(test_bucket)
 
 
-def hash_split(
-    df: DataFrame, cols: list[str], test_frac: float = 0.2, seed: int = 0
-) -> tuple[DataFrame, DataFrame]:
-    """(train, test) split by xxhash64 of the key columns — uniform even when
-    the raw key is skewed or non-integer. Content-derived, so stable under
-    retry and repartition (unlike ``randomSplit``)."""
-    bucket = F.pmod(F.xxhash64(F.lit(seed), *[F.col(c) for c in cols]), F.lit(10_000))
-    is_test = bucket < F.lit(int(test_frac * 10_000))
-    return df.filter(~is_test), df.filter(is_test)
-
-
 def knuth_split(
     df: DataFrame, key_col: str, test_frac: float = 0.2
 ) -> tuple[DataFrame, DataFrame]:
@@ -57,10 +42,8 @@ def knuth_split(
     hash (operators/sampling.py::knuth_bucket — overflow-safe int64
     congruence arithmetic for any key; DuckDB replays it as
     ``((CAST(key AS HUGEINT) * 2654435761) % 10000 + 10000) % 10000``,
-    same values). Use this instead of :func:`hash_split` when the split
-    must be part of an exact oracle (xxhash64 has no DuckDB twin);
-    content-derived and retry/repartition-stable like the xxhash64
-    variant."""
+    same values), so the split can be part of an exact oracle;
+    content-derived and retry/repartition-stable."""
     from ..operators.sampling import _BUCKETS, knuth_bucket
 
     bucket = knuth_bucket(key_col)
@@ -166,8 +149,10 @@ def ols_eval_oracle_sql(
 ) -> str:
     """DuckDB twin of :func:`train_test_ols_eval` — same moments, same
     scalar math, same rounding. ``split_sql`` is the integer SQL expression
-    used as the split key."""
+    used as the split key. DuckDB's ``%`` keeps the sign of the key, so the
+    bucket is taken as ``((key % k) + k) % k``, Spark's ``pmod``."""
     h = scale // 2
+    bucket = f"((({split_sql}) % {k}) + {k}) % {k}"
 
     def m(alias: str, pred: str) -> str:
         return f"""
@@ -181,8 +166,8 @@ def ols_eval_oracle_sql(
       WHERE {x} IS NOT NULL AND {y} IS NOT NULL AND {pred}"""
 
     return f"""
-    WITH tm AS ({m('tm', f'({split_sql}) % {k} <> {test_bucket}')}),
-    em AS ({m('em', f'({split_sql}) % {k} = {test_bucket}')}),
+    WITH tm AS ({m('tm', f'{bucket} <> {test_bucket}')}),
+    em AS ({m('em', f'{bucket} = {test_bucket}')}),
     fit AS (
       SELECT tm.n AS t_n, em.n AS e_n,
              (tm.sxy - tm.sx * tm.sy / CAST(tm.n AS DOUBLE))
@@ -207,57 +192,3 @@ def ols_eval_oracle_sql(
            CAST(e_n AS BIGINT) AS n_test
     FROM ev
     """
-
-
-# ---------------------------------------------------------------------------
-# GLM summary table (R summary(glm) parity)
-# ---------------------------------------------------------------------------
-def fit_glm_binomial(
-    df: DataFrame,
-    label: str,
-    numeric: list[str],
-    categorical: list[str] | None = None,
-) -> tuple[object, DataFrame]:
-    """Binomial GLM via IRLS (``GeneralizedLinearRegression``) — the direct
-    analog of the reference's ``glm(family=binomial)`` + ``summary``
-    (R_groupe4.R:1002-1011). Returns (pipeline_model, summary_df) with one
-    row per coefficient: (feature, coefficient, std_error, z_value,
-    p_value)."""
-    from pyspark.ml import Pipeline
-    from pyspark.ml.regression import GeneralizedLinearRegression
-
-    from .pipeline import _assembled_names, _feature_pipeline
-
-    categorical = categorical or []
-    clean = df.dropna(subset=[label, *numeric, *categorical])
-    if clean.isEmpty():
-        # empty-in/empty-out (see ml.pipeline.fit_multiple_ols)
-        empty = df.sparkSession.createDataFrame(
-            [],
-            "feature string, coefficient double, std_error double,"
-            " z_value double, p_value double",
-        )
-        return None, empty
-    stages = _feature_pipeline(numeric, categorical)
-    glm = GeneralizedLinearRegression(
-        family="binomial", link="logit", featuresCol="features", labelCol=label,
-        regParam=0.0,
-    )
-    model = Pipeline(stages=[*stages, glm]).fit(clean)
-    glmm = model.stages[-1]
-    names = ["intercept"] + _assembled_names(model, numeric, categorical)
-    coefs = [float(glmm.intercept)] + [float(c) for c in glmm.coefficients]
-    s = glmm.summary
-    ses = list(s.coefficientStandardErrors)
-    zs = list(s.tValues)  # z statistics under the binomial family
-    ps = list(s.pValues)
-    # Spark appends the intercept LAST in the inference arrays
-    ses = [ses[-1]] + ses[:-1]
-    zs = [zs[-1]] + zs[:-1]
-    ps = [ps[-1]] + ps[:-1]
-    rows = list(zip(names, coefs, ses, zs, ps))
-    summary_df = df.sparkSession.createDataFrame(
-        rows,
-        "feature string, coefficient double, std_error double, z_value double, p_value double",
-    )
-    return model, summary_df

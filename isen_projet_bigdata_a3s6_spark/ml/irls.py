@@ -127,8 +127,8 @@ def logistic_confusion_closed(
     """M7+M8 composed: fixed-round IRLS fit, per-feature coefficient
     quantization, then the long-form confusion matrix of the QUANTIZED
     model at threshold 0.5 (p > 0.5 ⟺ margin > 0 — computed margin-side,
-    no sigmoid in the scoring pass). Same output shape as
-    ml.pipeline.confusion_matrix: (label, prediction, n)."""
+    no sigmoid in the scoring pass). Long form, as R's ``table(label,
+    pred)``: (label, prediction, n)."""
     spark = df.sparkSession
     beta = logistic_irls_fit(df, label, numeric, dummies, iters)
     schema = "label long, prediction long, n long"

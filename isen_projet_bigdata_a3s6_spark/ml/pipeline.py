@@ -1,17 +1,16 @@
-"""Spark ML wrappers (SURVEY §2.11 M4, M7, M8, M9).
+"""Spark ML references for tests (SURVEY §2.11 M4, M7).
 
-Reference models:
+The registered paths fit these models in closed form (``ml/irls.py``,
+``stats/regression.py``); the tests pin them against the Spark ML fits here:
 - M4 multiple OLS with inferential summary (R ``lm`` + ``summary``,
-  R_groupe4.R:845-847): LinearRegression with ``solver="normal"`` so
-  coefficient std-errors / t / p are available like R's summary.lm.
-- M7 logistic (R ``glm(family=binomial)``, R_groupe4.R:1002-1008).
-- M8 confusion matrix + accuracy (R_groupe4.R:1010-1011).
-- M9 score-then-query composition (R_groupe4.R:1013-1033).
+  R_groupe4.R:845-847), q43's twin: LinearRegression with
+  ``solver="normal"`` so coefficient std-errors / t / p are available like
+  R's summary.lm.
+- M7 logistic (R ``glm(family=binomial)``, R_groupe4.R:1002-1008), q44's
+  twin.
 
 Categorical predictors go through StringIndexer→OneHotEncoder exactly where
-the reference relies on R's automatic dummy expansion. Training crosses the
-driver↔executor boundary per iteration (L-BFGS) or once (normal solver);
-scoring is a pure map — both scale.
+the reference relies on R's automatic dummy expansion.
 """
 
 from __future__ import annotations
@@ -117,7 +116,7 @@ def fit_logistic(
     ``probability_1`` and thresholded ``prediction`` columns
     (reference predict(type="response") + 0.5 cut, R_groupe4.R:1005-1007)."""
     categorical = categorical or []
-    # Mirror fit_multiple_ols/fit_glm_binomial: drop rows with NULL label or
+    # Mirror fit_multiple_ols: drop rows with NULL label or
     # features BEFORE the emptiness guard — a non-empty frame whose label
     # column is all-NULL (the degenerate-day shape) would otherwise reach
     # Pipeline.fit and crash inside the assembler.
@@ -141,32 +140,3 @@ def fit_logistic(
         "prediction", F.when(F.col("probability_1") > threshold, 1.0).otherwise(0.0)
     )
     return model, scored
-
-
-def confusion_matrix(scored: DataFrame, label: str, pred: str = "prediction") -> DataFrame:
-    """M8: long-form confusion counts (R ``table(label, pred)``,
-    R_groupe4.R:1010-1011)."""
-    return (
-        scored.groupBy(
-            F.col(label).cast("long").alias("label"),
-            F.col(pred).cast("long").alias("prediction"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def accuracy(scored: DataFrame, label: str, pred: str = "prediction") -> float:
-    row = scored.agg(
-        (
-            F.sum(F.when(F.col(label).cast("long") == F.col(pred).cast("long"), 1).otherwise(0))
-            / F.count(F.lit(1))
-        ).alias("acc")
-    ).collect()[0]
-    return float(row["acc"])
-
-
-def score_and_filter(model: PipelineModel, df: DataFrame, predicate) -> DataFrame:
-    """M9: score-then-query composition — attach predictions lazily, filter
-    with an ordinary predicate (reference ``predicted_useful < 0.5`` map,
-    R_groupe4.R:1022-1033)."""
-    return model.transform(df).filter(predicate)

@@ -1,15 +1,3 @@
-from .columns import (
-    decode_image_stub,
-    extract_image_features,
-    frame_sample_stub,
-    image_meta_schema,
-    with_media_metadata,
-)
+from .columns import decode_image_stub, extract_image_features
 
-__all__ = [
-    "decode_image_stub",
-    "extract_image_features",
-    "frame_sample_stub",
-    "image_meta_schema",
-    "with_media_metadata",
-]
+__all__ = ["decode_image_stub", "extract_image_features"]

@@ -21,30 +21,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-image_meta_schema = T.StructType(
-    [
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("format", T.StringType()),
-    ]
-)
-
-
-def with_media_metadata(df: DataFrame, binary_col: str = "content") -> DataFrame:
-    """Attach size/fingerprint metadata to a binary media column — pure
-    builtin expressions (no decode needed)."""
-    c = F.col(binary_col)
-    return df.withColumns(
-        {
-            "media_bytes": F.length(c).cast("long"),
-            "media_sha1": F.sha1(c),
-            "media_crc32": F.crc32(c),
-        }
-    )
 
 
 def decode_image_stub(data: bytes, strict: bool = False) -> np.ndarray:
@@ -60,15 +36,6 @@ def decode_image_stub(data: bytes, strict: bool = False) -> np.ndarray:
     seed = int.from_bytes(hashlib.sha256(data or b"").digest()[:4], "big")
     rng = np.random.default_rng(seed)
     return rng.integers(0, 256, size=(8, 8, 3), dtype=np.uint8)
-
-
-def frame_sample_stub(data: bytes, every_n: int = 10, strict: bool = False) -> list[np.ndarray]:
-    """STUB video frame sampling: deterministic fake frames; the real
-    implementation decodes with pyav/ffmpeg and keeps every n-th frame."""
-    if strict:
-        raise NotImplementedError("video codecs unavailable; plug pyav/ffmpeg in")
-    n_frames = (len(data or b"") % 50) // every_n + 1
-    return [decode_image_stub((data or b"") + bytes([i])) for i in range(n_frames)]
 
 
 _FEATURE_SCHEMA = (

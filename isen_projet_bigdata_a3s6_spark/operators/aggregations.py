@@ -4,8 +4,7 @@ Reference shapes: ungrouped mean/median/quantile/IQR (R_groupe4.R:213-228),
 grouped means (R_groupe4.R:231-246), grouped stats bundles
 (R_groupe4.R:249-272), grouped counts (R_groupe4.R:194-196,627-629,677-679,
 720-722), per-group mode (R_groupe4.R:197-198), crosstabs
-(R_groupe4.R:880-894,1010-1011), min/max extents, argmin
-(R_groupe4.R:122,140).
+(R_groupe4.R:880-894,1010-1011).
 
 Physical posture: everything here is two-phase hash aggregation
 (partial map-side combine → single shuffle on the group key → final) —
@@ -93,20 +92,6 @@ def crosstab_pivot(df: DataFrame, a: str, b: str, values: list[str] | None = Non
     return piv.count().fillna(0)
 
 
-def extents(df: DataFrame, cols: list[str]) -> DataFrame:
-    """A9: min/max plot extents (R_groupe4.R:667,689-690,...)."""
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-    return df.groupBy().agg(*aggs)
-
-
-def argmin(df: DataFrame, group_by: list[str], value_col: str, order_col: str) -> DataFrame:
-    """A10: per-group value minimizing ``order_col`` (R ``which.min``,
-    R_groupe4.R:122,140) — `min_by` is a single-pass mergeable aggregate."""
-    return df.groupBy(*group_by).agg(F.min_by(value_col, order_col).alias(value_col))
-
-
 def top_k(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
     """O1 global top-k → physical ``TakeOrderedAndProject`` (no full sort:
     each partition keeps k, driver merges k·p rows)."""
@@ -142,8 +127,8 @@ def top_k_per_group_salted(
     :func:`top_k_per_group` for any total ``order_cols`` ordering; the
     stage-2 input is tiny regardless of skew.
 
-    Salt is content-derived (xxhash64 of ``salt_from`` — deterministic under
-    retry/repartition, same discipline as ``joins.salted_join``).
+    Salt is content-derived (xxhash64 of ``salt_from``), so it is
+    deterministic under retry/repartition, unlike ``F.rand``.
     """
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_from]), F.lit(salt_buckets))
     w1 = W.partitionBy(*group_by, "__salt").orderBy(*order_cols)

@@ -182,58 +182,6 @@ def asof_join(
     ).drop("__matched_ts")
 
 
-_SALTED_JOIN_HOW = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "left_anti", "leftanti"}
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    how: str = "inner",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skew-resistant equi-join: salt the (big, skewed) left side into
-    ``salt_buckets`` sub-keys and replicate the right side across buckets,
-    then join on (key, salt). Turns one hot key's single straggler task into
-    ``salt_buckets`` parallel tasks.
-
-    Only left-preserving joins are valid: the right side is replicated across
-    all salts, so ``right``/``full`` outer joins would emit each unmatched
-    right row ``salt_buckets`` times — rejected explicitly.
-
-    The salt is derived from the row content (xxhash64 over all left
-    columns), NOT ``F.rand``: a random salt is re-drawn when a failed task
-    retries, so two retries of the same stage could salt the same row into
-    different buckets mid-join. Content-derived salt is retry/repartition
-    stable by construction.
-
-    AQE's skew-join splitting (enabled in the session factory) handles most
-    cases automatically; explicit salting is for deterministic layouts or
-    non-AQE engines. Replication factor = salt_buckets on the right side —
-    keep it small and the right side the smaller input.
-    """
-    if how.lower().replace("_", "") not in {h.replace("_", "") for h in _SALTED_JOIN_HOW}:
-        raise ValueError(
-            f"salted_join supports left-preserving joins only (got how={how!r}): "
-            "the replicated right side would duplicate unmatched right rows "
-            "under right/full outer semantics"
-        )
-    salted_l = left.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salt_buckets)).cast("int"),
-    )
-    salted_r = right.join(
-        F.broadcast(
-            left.sparkSession.range(salt_buckets).select(
-                F.col("id").cast("int").alias("__salt")
-            )
-        ),
-        how="cross",
-    )
-    out = salted_l.join(salted_r, [on, "__salt"], how)
-    return out.drop("__salt")
-
-
 def knn_join_1nn_grid_exact(
     probes: DataFrame,
     known: DataFrame,

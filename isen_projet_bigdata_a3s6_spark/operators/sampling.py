@@ -2,23 +2,16 @@
 
 Sampling for a 100 TB pipeline must be content-derived, never RNG-derived:
 ``df.sample``/``rand()`` re-draw under task retry and change membership
-under repartition, which silently breaks exactly-once semantics downstream
-(the same discipline as ``ml.evaluation.hash_split`` and the deterministic
-salt in ``operators.joins.salted_join``).
+under repartition, which silently breaks exactly-once semantics downstream.
 
-Two variants:
+Both variants bucket an integer key by Knuth's multiplicative hash
+(2654435761 odd multiplier mod 10_000), expressible identically in any SQL
+engine, so each has a cross-engine-verifiable DuckDB twin:
 
-- :func:`stratified_hash_sample` — the production path. xxhash64 of the key
-  columns + a seed, bucketed to 1e4; well-mixed for any key type. Engine-
-  specific hash, so it pairs with rows-only verification.
-- :func:`stratified_mod_sample` — multiplicative-hash variant
-  (Knuth's 2654435761 odd multiplier mod 10_000) over a single integer key.
-  Weaker mixing, but expressible identically in any SQL engine — the
-  cross-engine-verifiable twin used by the oracle-paired query.
-
-Both accept per-stratum fractions: sampling rates that differ by class are
-the normal case for training-data curation (keep all rare high-quality
-docs, downsample boilerplate).
+- :func:`stratified_mod_sample` — per-stratum fractions: sampling rates
+  that differ by class are the normal case for training-data curation
+  (keep all rare high-quality docs, downsample boilerplate).
+- :func:`stratified_exact_k` — a fixed budget of k rows per stratum.
 """
 
 from __future__ import annotations
@@ -66,21 +59,6 @@ def _stratum_threshold(fractions: dict[str, float], stratum_col: str, default_fr
     return thr
 
 
-def stratified_hash_sample(
-    df: DataFrame,
-    key_cols: list[str],
-    stratum_col: str,
-    fractions: dict[str, float],
-    default_frac: float = 0.0,
-    seed: int = 0,
-) -> DataFrame:
-    """Keep each row iff xxhash64(seed, keys) mod 1e4 falls under its
-    stratum's threshold. Membership is a pure function of row content —
-    stable under retry, repartition, and re-runs with the same seed."""
-    bucket = F.pmod(F.xxhash64(F.lit(seed), *[F.col(c) for c in key_cols]), F.lit(_BUCKETS))
-    return df.filter(bucket < _stratum_threshold(fractions, stratum_col, default_frac))
-
-
 def stratified_mod_sample(
     df: DataFrame,
     key_col: str,
@@ -93,8 +71,7 @@ def stratified_mod_sample(
     int64 congruence arithmetic (r12; the old DECIMAL(38,0) multiply was
     equally exact but a per-row BigDecimal op). Any SQL engine reproduces
     the identical membership via 128-bit/decimal arithmetic (DuckDB: cast
-    the key to HUGEINT first — same values); prefer the xxhash64 variant
-    whenever cross-engine replay isn't required."""
+    the key to HUGEINT first — same values)."""
     bucket = knuth_bucket(key_col)
     return df.filter(bucket < _stratum_threshold(fractions, stratum_col, default_frac))
 

@@ -248,29 +248,6 @@ def _bloom_positions(col: str, num_bits: int, num_hashes: int, seed: int):
     ]
 
 
-def bloom_build(
-    df: DataFrame,
-    key_col: str,
-    num_bits: int = 65536,
-    num_hashes: int = 5,
-    seed: int = 7,
-) -> DataFrame:
-    """Bloom filter as a ONE-ROW DataFrame ``(bloom: map<long, long>)`` —
-    word-index → 64-bit word, built entirely in Catalyst expressions
-    (Spark 4.1 does not expose ``bloom_filter_agg``/``might_contain`` as
-    public SQL functions, so this is the portable equivalent).
-
-    Shape: explode k positions per key → groupBy word index with
-    ``bit_or(shiftleft(1, pos % 64))`` (shuffle output ≤ m/64 rows
-    regardless of input size) → fold into one map row. Filters from
-    different days/partitions merge by bit_or on the word level. No UDF,
-    no driver collect; the map row broadcasts to probes."""
-    words = bloom_words(df, key_col, num_bits, num_hashes, seed)
-    return words.agg(
-        F.map_from_entries(F.collect_list(F.struct("word", "bits"))).alias("bloom")
-    )
-
-
 def bloom_words(
     df: DataFrame,
     key_col: str,
@@ -278,10 +255,16 @@ def bloom_words(
     num_hashes: int = 5,
     seed: int = 7,
 ) -> DataFrame:
-    """The words-level Bloom frame ``(word, bits)`` — ≤ m/64 rows. Feed it
-    to :func:`bloom_literal_predicate` directly to skip the one-row fold
-    (one less stage in the driver-side build job), or fold it via
-    :func:`bloom_build` when the map row itself is the deliverable."""
+    """Bloom filter as a words-level frame ``(word, bits)`` — word index →
+    64-bit word, ≤ m/64 rows, built entirely in Catalyst expressions (Spark
+    4.1 does not expose ``bloom_filter_agg``/``might_contain`` as public SQL
+    functions, so this is the portable equivalent).
+
+    Shape: explode k positions per key → groupBy word index with
+    ``bit_or(shiftleft(1, pos % 64))`` (shuffle output ≤ m/64 rows
+    regardless of input size). Filters from different days/partitions merge
+    by bit_or on the word level. No UDF; probe with
+    :func:`bloom_literal_predicate`."""
     if num_bits % 64 != 0 or num_bits < 64:
         raise ValueError("bloom_words: num_bits must be a positive multiple of 64")
     if num_hashes < 1:
@@ -379,24 +362,15 @@ def bloom_literal_predicate(
     return the membership test as a LITERAL column predicate — the same
     move Spark's own runtime row-level bloom filtering makes (the filter is
     built on the driver and injected into the probe scan's predicates).
-    Unlike the join form (:func:`bloom_might_contain`), a literal predicate
-    cannot be hoisted above other joins by the optimizer: it evaluates in
-    codegen directly above the scan, BELOW every exchange. Use this when
-    the pruning position matters; the collect is of the sketch only, never
-    of data.
-
-    Accepts either :func:`bloom_build`'s one-row map frame or the
-    words-level frame (columns ``word``/``bits``) — the latter skips the
-    single-row fold stage, one less shuffle in the driver-side build job.
-    """
-    if set(bloom.columns) >= {"word", "bits"}:
-        words = {r["word"]: r["bits"] for r in bloom.collect()}
-    else:
-        row = bloom.first()
-        words = dict(row["bloom"] or {})
+    Unlike a broadcast join against the filter, a literal predicate cannot
+    be hoisted above other joins by the optimizer: it evaluates in codegen
+    directly above the scan, BELOW every exchange. The collect is of the
+    sketch only (:func:`bloom_words`'s frame), never of data. No false
+    negatives; the false-positive rate is set by m/n and k. Build params
+    must match."""
     dense = [0] * (num_bits // 64)
-    for w, bits in words.items():
-        dense[int(w)] = int(bits)
+    for r in bloom.collect():
+        dense[int(r["word"])] = int(r["bits"])
     # ONE array literal (a single py4j call): per-element F.lit() would
     # cost num_bits/64 driver round-trips — measured ~2.5 s of pure plan
     # construction at the default 64 Kbit size
@@ -408,35 +382,6 @@ def bloom_literal_predicate(
         t = F.bit_get(word, (p % 64).cast("int")) == 1
         cond = t if cond is None else (cond & t)
     return cond
-
-
-def bloom_might_contain(
-    bloom: DataFrame,
-    probe: DataFrame,
-    key_col: str,
-    num_bits: int = 65536,
-    num_hashes: int = 5,
-    seed: int = 7,
-) -> DataFrame:
-    """Filter ``probe`` to rows the Bloom filter might contain (no false
-    negatives; false-positive rate set by m/n and k). The one-row filter
-    broadcasts; the membership test — ``element_at(map, pos/64)`` plus a
-    shift-and-mask per hash — is pure codegen'd expression, so the probe
-    side is pruned before any shuffle. Build params must match."""
-    tests = []
-    for p in _bloom_positions(key_col, num_bits, num_hashes, seed):
-        word = F.coalesce(
-            F.element_at(F.col("bloom"), (p / 64).cast("long")), F.lit(0).cast("long")
-        )
-        tests.append(F.bit_get(word, (p % 64).cast("int")) == 1)
-    cond = tests[0]
-    for t in tests[1:]:
-        cond = cond & t
-    return (
-        probe.join(F.broadcast(bloom))
-        .filter(cond)
-        .drop("bloom")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -2501,8 +2501,7 @@ def q81_glm_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     logistic_summary_closed): coefficient column = the per-feature
     QUANTIZED estimate (a blanket round6 would erase the ~1e-8 totalprice
     slope), z = βq / sqrt(diag (X'WX)⁻¹) at the quantized fit, round2.
-    ml.evaluation.fit_glm_binomial remains the API surface, numpy-pinned
-    in tests; R-style alphabetical dummy coding as q43/q44."""
+    R-style alphabetical dummy coding as q43/q44."""
     from .functions.scalar import binary_label
     from .ml.irls import logistic_summary_closed
 
@@ -5572,8 +5571,7 @@ def q158_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_totalprice") > 400000)
         .select("o_orderkey")
     )
-    # words-level frame: the literal-predicate build collects <=1024 word
-    # rows directly, skipping the one-row map fold stage
+    # words-level frame: the literal-predicate build collects <=1024 word rows
     bloom = bloom_words(o_sel, "o_orderkey")
     # literal-predicate form (Spark's own runtime-bloom move): the bit test
     # becomes a scan-level filter the optimizer cannot hoist above the semi

@@ -14,15 +14,8 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
-
-# Tags whose directory is currently leased by an unfinished call site
-# (see scratch_lease). scratch_dir refuses to wipe a live tag and falls
-# back to a fresh unique dir instead — wiping would delete a running
-# stream's staged source/checkpoint out from under it.
-_LIVE_TAGS: set[tuple[str, str]] = set()
 
 
 def scratch_dir(spark: SparkSession, tag: str) -> str:
@@ -33,18 +26,10 @@ def scratch_dir(spark: SparkSession, tag: str) -> str:
     must start clean; parquet read-backs must not fold in stale parts).
 
     Contract: a tag names ONE operation, and calls for the same tag must
-    not overlap — each call wipes the previous call's directory. Call
-    sites that stage data consumed by a long-running job (streaming
-    sources/checkpoints) should hold the tag through ``scratch_lease`` so
-    a concurrent re-entry of the same tag gets a fresh unique dir instead
-    of deleting the live one.
+    not overlap — each call wipes the previous call's directory.
     """
     app_id = spark.sparkContext.applicationId
     root = os.path.join(tempfile.gettempdir(), f"a3s6_scratch_{app_id}", tag)
-    if (app_id, tag) in _LIVE_TAGS:
-        # the tag's directory is leased by a still-running call site:
-        # trade one leaked dir for not deleting live state
-        return tempfile.mkdtemp(prefix=f"a3s6_{tag}_")
     shutil.rmtree(root, ignore_errors=True)
     if os.path.exists(root):
         # the wipe failed (EBUSY on a still-open handle, NFS silly-rename,
@@ -54,24 +39,6 @@ def scratch_dir(spark: SparkSession, tag: str) -> str:
         return tempfile.mkdtemp(prefix=f"a3s6_{tag}_")
     os.makedirs(root)
     return root
-
-
-@contextmanager
-def scratch_lease(spark: SparkSession, tag: str):
-    """``scratch_dir`` plus a liveness lease: while the with-block runs,
-    any other ``scratch_dir(spark, tag)`` call for the same tag is routed
-    to a fresh unique directory rather than wiping this one."""
-    app_id = spark.sparkContext.applicationId
-    path = scratch_dir(spark, tag)
-    key = (app_id, tag)
-    fresh = key not in _LIVE_TAGS
-    if fresh:
-        _LIVE_TAGS.add(key)
-    try:
-        yield path
-    finally:
-        if fresh:
-            _LIVE_TAGS.discard(key)
 
 
 def stage_parquet_files(parquet_path: str, stage_dir: str) -> int:

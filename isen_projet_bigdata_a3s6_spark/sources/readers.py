@@ -59,27 +59,6 @@ TABLES = (
 DRIVER_FIXTURE_ROOT = "/root/testdata/sf0.01"
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    header: bool = True,
-    all_string: bool = False,
-) -> DataFrame:
-    """S1: CSV scan (reference ``read.csv`` at R_groupe4.R:41-42).
-
-    ``all_string=True`` reproduces the reference's untyped read exactly
-    (every column StringType, cast later); otherwise pass an explicit
-    ``schema`` — never infer in production (two passes over the data).
-    """
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif not all_string:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet_ns_safe(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
@@ -242,7 +221,3 @@ def _decode_ns(df: DataFrame, ns_cols: tuple[str, ...]) -> DataFrame:
     if not ns_cols:
         return df
     return df.withColumns({c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in ns_cols})
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}

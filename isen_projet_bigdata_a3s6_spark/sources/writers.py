@@ -16,20 +16,6 @@ def write_csv(df: DataFrame, path: str, single_file: bool = False, mode: str = "
     out.write.option("header", "true").mode(mode).csv(path)
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Columnar sink; ``partition_by`` enables partition pruning for readers
-    downstream (the 100 TB default)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """S2: JSON-lines sink (interchange format; schema-on-read downstream).
     Timestamps serialize as ISO-8601 in the session timezone — pin UTC for

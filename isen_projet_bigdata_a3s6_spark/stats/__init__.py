@@ -1,3 +1,3 @@
-from . import descriptive, distributions, inference, regression
+from . import descriptive, inference, regression
 
-__all__ = ["descriptive", "distributions", "inference", "regression"]
+__all__ = ["descriptive", "inference", "regression"]

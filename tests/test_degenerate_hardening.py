@@ -187,7 +187,6 @@ def test_empty_input_library_operators(spark):
 
 def test_empty_input_ml_fits(spark):
     from isen_projet_bigdata_a3s6_spark.ml.pipeline import (
-        confusion_matrix,
         fit_logistic,
         fit_multiple_ols,
     )
@@ -198,7 +197,6 @@ def test_empty_input_ml_fits(spark):
     assert "coefficient" in summary.columns
     model, scored = fit_logistic(empty, "y", ["x"], ["g"])
     assert model is None and scored.count() == 0
-    assert confusion_matrix(scored, "y").count() == 0
 
 
 def test_try_parse_json_tolerates_garbage(spark):

@@ -57,18 +57,6 @@ def test_asof_join(spark):
     assert got == {(1, 10, 100.0), (1, 20, 200.0), (2, 5, None)}
 
 
-def test_salted_join_matches_plain(spark):
-    from isen_projet_bigdata_a3s6_spark.operators.joins import salted_join
-
-    left = spark.createDataFrame(
-        [(1, f"l{i}") for i in range(50)] + [(2, "x")], "k int, lv string"
-    )
-    right = spark.createDataFrame([(1, "r1"), (2, "r2"), (3, "r3")], "k int, rv string")
-    plain = left.join(right, "k").select("k", "lv", "rv")
-    salted = salted_join(left, right, "k").select("k", "lv", "rv")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
 def test_bucketed_write_join(spark):
     import uuid
 

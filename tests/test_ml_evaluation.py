@@ -1,18 +1,15 @@
-"""ML evaluation parity: splits, evaluator bundles, GLM summary.
+"""ML evaluation parity: splits, evaluator bundles, PCA.
 
 Metric math is pinned to independent references — Spark ML's evaluators for
-the metric bundles, a numpy IRLS for the GLM coefficient table — so the
-single-pass aggregate implementations can't drift."""
+the metric bundles, numpy for PCA — so the single-pass aggregate
+implementations can't drift."""
 
-import numpy as np
 import pytest
 from conftest import duck_rows
 from pyspark.sql import functions as F
 
 from isen_projet_bigdata_a3s6_spark.ml.evaluation import (
     classification_metrics,
-    fit_glm_binomial,
-    hash_split,
     modulo_is_test,
     ols_eval_oracle_sql,
     train_test_ols_eval,
@@ -72,11 +69,14 @@ def test_regression_metrics_match_evaluator(spark):
     assert (got["n_train"], got["n_test"]) == (160, 40)
 
 
-def _ols_eval_pair(spark, rows):
+def _ols_eval_pair(spark, rows, test_bucket=0):
     """train_test_ols_eval on ``rows`` (id, x, y) and its DuckDB twin
-    (``ols_eval_oracle_sql``) on the same rows, split on id % 5 == 0."""
+    (``ols_eval_oracle_sql``) on the same rows, split on
+    pmod(id, 5) == test_bucket."""
     df = spark.createDataFrame(rows, "id long, x double, y double")
-    got = tuple(train_test_ols_eval(df, "y", "x", "id", k=5).collect()[0])
+    got = tuple(
+        train_test_ols_eval(df, "y", "x", "id", k=5, test_bucket=test_bucket).collect()[0]
+    )
     values = ", ".join(
         "(" + ", ".join("NULL" if v is None else repr(v) for v in r) + ")" for r in rows
     )
@@ -84,7 +84,9 @@ def _ols_eval_pair(spark, rows):
         "(SELECT CAST(id AS BIGINT) AS id, CAST(x AS DOUBLE) AS x,"
         f" CAST(y AS DOUBLE) AS y FROM (VALUES {values}) v(id, x, y))"
     )
-    (want,) = duck_rows(ols_eval_oracle_sql(table, "y", "x", split_sql="id", k=5))
+    (want,) = duck_rows(
+        ols_eval_oracle_sql(table, "y", "x", split_sql="id", k=5, test_bucket=test_bucket)
+    )
     return got, tuple(want)
 
 
@@ -111,6 +113,15 @@ def test_ols_eval_drops_null_x_y_before_the_split(spark):
     assert got[4:] == (32, 8)
 
 
+def test_ols_eval_negative_keys_match_duckdb(spark):
+    """DuckDB's ``%`` keeps the key's sign; the twin takes the bucket as
+    Spark's ``pmod`` does, so negative keys land on the same side."""
+    rows = [(-i, float(i % 11), float(i % 11) * 2.0 + (i % 3) * 0.5) for i in range(1, 41)]
+    got, want = _ols_eval_pair(spark, rows, test_bucket=1)
+    assert got == want
+    assert got[4:] == (32, 8)
+
+
 def test_q79_scans_lineitem_once(spark, sf_dir):
     """Both sides' moments come from one aggregate over one scan: no second
     lineitem scan, no cross join of two aggregates."""
@@ -124,65 +135,21 @@ def test_q79_scans_lineitem_once(spark, sf_dir):
 
 def test_splits_partition_and_are_deterministic(spark, sf_dir):
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    n = o.count()
-    for split in (
-        lambda d: (
+
+    def split(d):
+        return (
             d.filter(~modulo_is_test("o_orderkey", k=5)),
             d.filter(modulo_is_test("o_orderkey", k=5)),
-        ),
-        lambda d: hash_split(d, ["o_orderkey"], test_frac=0.2),
-    ):
-        train, test = split(o)
-        nt, ne = train.count(), test.count()
-        assert nt + ne == n
-        assert train.join(test, "o_orderkey", "inner").count() == 0
-        # retry/repartition stability: same membership at a different layout
-        train2, test2 = split(o.repartition(13))
-        assert test2.select("o_orderkey").exceptAll(test.select("o_orderkey")).count() == 0
-        assert test2.count() == ne
+        )
 
-
-def _numpy_irls(X, y, max_iter=50, tol=1e-10):
-    """Reference binomial GLM (logit) via IRLS; returns (beta, std_errors)
-    with the intercept as column 0."""
-    Xd = np.column_stack([np.ones(len(y)), X])
-    beta = np.zeros(Xd.shape[1])
-    for _ in range(max_iter):
-        eta = Xd @ beta
-        mu = 1.0 / (1.0 + np.exp(-eta))
-        w = mu * (1.0 - mu)
-        z = eta + (y - mu) / np.clip(w, 1e-12, None)
-        WX = Xd * w[:, None]
-        beta_new = np.linalg.solve(Xd.T @ WX, Xd.T @ (w * z))
-        if np.max(np.abs(beta_new - beta)) < tol:
-            beta = beta_new
-            break
-        beta = beta_new
-    eta = Xd @ beta
-    mu = 1.0 / (1.0 + np.exp(-eta))
-    w = mu * (1.0 - mu)
-    cov = np.linalg.inv(Xd.T @ (Xd * w[:, None]))
-    return beta, np.sqrt(np.diag(cov))
-
-
-def test_glm_binomial_matches_numpy_irls(spark):
-    rng = np.random.RandomState(7)
-    x1 = rng.normal(size=400)
-    x2 = rng.normal(size=400)
-    logit = 0.8 * x1 - 1.2 * x2 + 0.3
-    y = (rng.uniform(size=400) < 1.0 / (1.0 + np.exp(-logit))).astype(float)
-    df = spark.createDataFrame(
-        [(float(a), float(b), float(c)) for a, b, c in zip(x1, x2, y)],
-        "x1 double, x2 double, y double",
-    )
-    _, summary = fit_glm_binomial(df, "y", ["x1", "x2"])
-    rows = {r["feature"]: r for r in summary.collect()}
-    beta, se = _numpy_irls(np.column_stack([x1, x2]), y)
-    for i, feat in enumerate(["intercept", "x1", "x2"]):
-        assert rows[feat]["coefficient"] == pytest.approx(beta[i], abs=1e-5)
-        assert rows[feat]["std_error"] == pytest.approx(se[i], rel=1e-4)
-        z = beta[i] / se[i]
-        assert rows[feat]["z_value"] == pytest.approx(z, rel=1e-4)
+    train, test = split(o)
+    ne = test.count()
+    assert train.count() + ne == o.count()
+    assert train.join(test, "o_orderkey", "inner").count() == 0
+    # retry/repartition stability: same membership at a different layout
+    _, test2 = split(o.repartition(13))
+    assert test2.select("o_orderkey").exceptAll(test.select("o_orderkey")).count() == 0
+    assert test2.count() == ne
 
 
 def test_pca_matches_numpy(spark):

@@ -4,11 +4,9 @@ every registered query emits scalar columns only, and the package holds
 no code that nothing outside the tests reaches."""
 
 import ast
-import io
 import re
 import subprocess
 import sys
-import tokenize
 from collections import Counter
 from pathlib import Path
 
@@ -78,10 +76,13 @@ def test_register_rejects_duplicate_name():
 def test_registry_import_leaves_duckdb_out():
     """DuckDB is the oracle's engine, not the engine's: importing the
     registry (and the driver contract over it) in a fresh interpreter
-    does not load it."""
+    does not load it. No registered query builds through Spark ML either,
+    so the import loads no ``pyspark.ml`` module."""
     code = (
         f"import sys; sys.path.insert(0, {str(Path(__file__).parents[1])!r}); "
-        "import __spark_entry__; print(sorted(m for m in sys.modules if m.split('.')[0] == 'duckdb'))"
+        "import __spark_entry__; "
+        "print(sorted(m for m in sys.modules if m.split('.')[0] == 'duckdb'"
+        " or m == 'pyspark.ml' or m.startswith('pyspark.ml.')))"
     )
     out = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, check=True)
     assert out.stdout.strip() == "[]"
@@ -93,53 +94,164 @@ def test_oracle_keys_subset():
 
 _PKG = Path(registry.__file__).parent
 _REPO = _PKG.parent
-# Reached only by tests, each kept pending its own decision: the p-value
-# library (chi2_sf, f_sf, t_sf) and the plan helpers.
-_REACH_EXEMPT = ("plans/", "stats/distributions.py")
+# Reached only by tests, each kept for its own reason. A key is a module
+# (every object in it) or one ``module::object``.
+_REACH_EXEMPT = {
+    "functions/bpe.py::java_ws_tokens":
+        "pure-Python mirror of text.tokens() that tests pin Spark's split against",
+    "functions/wordpiece.py::encode_word":
+        "reference encoder that tests pin the WordPiece UDF's by-value copy against",
+    "ml/kmeans.py::_sqdist_to_literal":
+        "reference distance the k-means inertia test checks the inlined fold against",
+    "ml/pipeline.py::fit_multiple_ols":
+        "Spark ML twin of q43's closed-form OLS",
+    "ml/pipeline.py::fit_logistic":
+        "Spark ML twin of q44's fixed-round IRLS",
+    "plans/trees_pipeline.py":
+        "the reference R script's Part 1 (trees cleaning) composition",
+    "plans/report_queries.py":
+        "the reference R script's Parts 2-5 (report) composition",
+}
 _WORD = re.compile(r"[A-Za-z_]\w*")
 
 
-def _words(src):
-    """(line, identifier) for every name in ``src``: code tokens plus the
-    words of its strings, docstrings and comments."""
-    out = []
-    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
-        if tok.type == tokenize.NAME:
-            out.append((tok.start[0], tok.string))
-        elif tok.type in (tokenize.STRING, tokenize.COMMENT):
-            out += [(tok.start[0], w) for w in _WORD.findall(tok.string)]
-    return out
+def _code_names(tree):
+    """(line, name) for every name the code of a parsed module reads:
+    ``Name`` and ``Attribute`` loads, f-string fields and decorators
+    included. Assignment targets, imports, ``__all__`` entries, docstrings,
+    comments and other strings are not uses."""
+    return [
+        (n.lineno, n.id if isinstance(n, ast.Name) else n.attr)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Name, ast.Attribute)) and isinstance(n.ctx, ast.Load)
+    ]
 
 
-def test_every_package_object_is_reached():
-    """Every module-level function and class of the package is named
-    outside its own definition (own docstring included) in package code,
-    ``__spark_entry__.py``, ``tools/`` or ``.claude/skills/``. Registered
-    queries are reached through the registry. Tests do not count: code
-    that only a test calls is a second mechanism nobody runs."""
-    seen = Counter()
+def _unreached(modules, others, words):
+    """``module::object`` for each module-level function and class of
+    ``modules`` (relative path -> source) that no code in ``modules`` or
+    ``others`` (sources) uses outside the object's own body and that
+    ``words`` (prose such as skill recipes) does not name. Registered
+    queries are reached through the registry."""
+    seen = Counter(words)
     defs = []
-    for path in sorted(_PKG.rglob("*.py")):
-        src = path.read_text()
-        words = _words(src)
-        seen.update(w for _, w in words)
-        rel = path.relative_to(_PKG).as_posix()
-        if rel.startswith(_REACH_EXEMPT):
-            continue
-        for node in ast.parse(src).body:
+    for rel, src in modules.items():
+        tree = ast.parse(src)
+        names = _code_names(tree)
+        seen.update(name for _, name in names)
+        for node in tree.body:
             if not isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ) or _is_registered(node):
                 continue
             own = sum(
-                1 for line, w in words
-                if w == node.name and node.lineno <= line <= node.end_lineno
+                1 for line, name in names
+                if name == node.name and node.lineno <= line <= node.end_lineno
             )
             defs.append((f"{rel}::{node.name}", node.name, own))
-    for path in [_REPO / "__spark_entry__.py", *sorted((_REPO / "tools").rglob("*.py"))]:
-        seen.update(w for _, w in _words(path.read_text()))
-    for path in sorted((_REPO / ".claude" / "skills").rglob("*")):
-        if path.is_file():
-            seen.update(_WORD.findall(path.read_text()))
-    unreached = [qual for qual, name, own in defs if seen[name] <= own]
+    for src in others:
+        seen.update(name for _, name in _code_names(ast.parse(src)))
+    return [qual for qual, name, own in defs if seen[name] <= own]
+
+
+def _exempt(qual):
+    return next((key for key in _REACH_EXEMPT if qual == key or qual.startswith(key + "::")), None)
+
+
+def test_every_package_object_is_reached():
+    """Every module-level function and class of the package is used in
+    code outside its own body: in package code, ``__spark_entry__.py`` or
+    ``tools/``, or named by a ``.claude/skills/`` recipe. Tests do not
+    count: code that only a test calls is a second mechanism nobody runs.
+    Each exemption must still cover something the scan flags."""
+    modules = {p.relative_to(_PKG).as_posix(): p.read_text() for p in sorted(_PKG.rglob("*.py"))}
+    others = [
+        p.read_text()
+        for p in [_REPO / "__spark_entry__.py", *sorted((_REPO / "tools").rglob("*.py"))]
+    ]
+    words = [
+        w
+        for p in sorted((_REPO / ".claude" / "skills").rglob("*"))
+        if p.is_file()
+        for w in _WORD.findall(p.read_text())
+    ]
+    flagged = _unreached(modules, others, words)
+    unreached = [qual for qual in flagged if not _exempt(qual)]
     assert not unreached, f"reached by nothing outside tests: {unreached}"
+    stale = set(_REACH_EXEMPT) - {_exempt(qual) for qual in flagged}
+    assert not stale, f"exempt but reached: {sorted(stale)}"
+
+
+_SYNTHETIC = {
+    "__init__.py": 'from .m import by_all, by_import\n__all__ = ["by_all"]\n',
+    "m.py": '''"""Prose names by_docstring."""
+
+
+def by_decorator(fn):
+    return fn
+
+
+def by_fstring():
+    return 1
+
+
+def by_attribute():
+    return 2
+
+
+def by_docstring():
+    return by_docstring()
+
+
+def by_comment():
+    return 3
+
+
+def by_string():
+    return 4
+
+
+def by_import():
+    return 5
+
+
+def by_all():
+    return 6
+
+
+def by_assignment():
+    return 7
+
+
+@by_decorator
+def top():
+    """Calls by_docstring in prose only."""
+    # by_comment()
+    text = "by_string()"
+    by_assignment = text
+    return f"{by_fstring()}" + str(mod.by_attribute()) + text
+''',
+}
+
+
+def test_reach_scan_counts_code_not_words():
+    """The guard's scanner on a synthetic package: f-string fields,
+    attribute calls and decorators are uses; docstrings, comments, strings,
+    imports, ``__all__``, assignment targets and a call from the object's
+    own body are not."""
+    assert _unreached(_SYNTHETIC, [], []) == [
+        "m.py::by_docstring",
+        "m.py::by_comment",
+        "m.py::by_string",
+        "m.py::by_import",
+        "m.py::by_all",
+        "m.py::by_assignment",
+        "m.py::top",
+    ]
+    assert _unreached(_SYNTHETIC, ["top()"], ["by_string"]) == [
+        "m.py::by_docstring",
+        "m.py::by_comment",
+        "m.py::by_import",
+        "m.py::by_all",
+        "m.py::by_assignment",
+    ]

@@ -3,10 +3,7 @@ plumbing."""
 
 from pyspark.sql import functions as F
 
-from isen_projet_bigdata_a3s6_spark.multimodal import (
-    extract_image_features,
-    with_media_metadata,
-)
+from isen_projet_bigdata_a3s6_spark.multimodal import extract_image_features
 from isen_projet_bigdata_a3s6_spark.plans.trees_pipeline import (
     FINAL_COLUMNS,
     clean_trees,
@@ -39,8 +36,6 @@ def test_clean_trees_invariants(spark):
 def test_media_metadata_and_features(spark):
     rows = [(1, bytearray(b"fake-png-bytes-1")), (2, bytearray(b"other-bytes"))]
     df = spark.createDataFrame(rows, "media_id long, content binary")
-    meta = with_media_metadata(df).collect()
-    assert all(r["media_bytes"] > 0 and len(r["media_sha1"]) == 40 for r in meta)
     feats = extract_image_features(df).collect()
     assert {r["media_id"] for r in feats} == {1, 2}
     assert all(r["width"] == 8 and r["channels"] == 3 for r in feats)

@@ -1,34 +1,9 @@
-"""Round-2 hardening: deterministic salting, grid-exact row preservation,
+"""Round-2 hardening: grid-exact row preservation,
 CC pointer-jumping/convergence, reliable checkpointing, cache hygiene,
 OLS inference, knn auto-dispatch."""
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_salted_join_rejects_right_and_full(spark):
-    from isen_projet_bigdata_a3s6_spark.operators.joins import salted_join
-
-    left = spark.createDataFrame([(1, "a")], "k int, lv string")
-    right = spark.createDataFrame([(1, "b"), (2, "c")], "k int, rv string")
-    for how in ("right", "full", "right_outer", "full_outer", "outer"):
-        with pytest.raises(ValueError):
-            salted_join(left, right, "k", how=how)
-
-
-def test_salted_join_stable_under_repartition(spark):
-    """Content-derived salt: identical output regardless of partitioning —
-    the retry-stability property F.rand lacked."""
-    from isen_projet_bigdata_a3s6_spark.operators.joins import salted_join
-
-    left = spark.createDataFrame(
-        [(i % 3, f"l{i}") for i in range(60)], "k int, lv string"
-    )
-    right = spark.createDataFrame([(0, "r0"), (1, "r1"), (2, "r2")], "k int, rv string")
-    a = salted_join(left.repartition(2), right, "k").select("k", "lv", "rv")
-    b = salted_join(left.repartition(13), right, "k").select("k", "lv", "rv")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    assert a.count() == 60
 
 
 def test_grid_exact_residual_fallback_row_preserving(spark):
@@ -174,11 +149,10 @@ def test_reliable_checkpoint_mode(spark, tmp_path):
 
 
 def test_simple_ols_inference_matches_numpy(spark):
-    """Simple-OLS inference (slope std error, t, p) from the closed-form
+    """Simple-OLS inference (slope std error, t) from the closed-form
     multiple OLS with one regressor, against numpy."""
     import numpy as np
 
-    from isen_projet_bigdata_a3s6_spark.stats.distributions import t_sf
     from isen_projet_bigdata_a3s6_spark.stats.regression import (
         multiple_ols_closed_form,
         simple_ols_df,
@@ -202,8 +176,6 @@ def test_simple_ols_inference_matches_numpy(spark):
     assert got["intercept"]["coefficient"] == pytest.approx(beta[0], abs=1e-9)
     assert slope["std_error"] == pytest.approx(se_slope, rel=1e-9)
     assert slope["t_value"] == pytest.approx(t, rel=1e-9)
-    p_slope = 2.0 * t_sf(abs(slope["t_value"]), len(xs) - 2)
-    assert 0.0 < p_slope < 1e-6  # strong linear signal
 
     # the display fit agrees (same data, round6)
     disp = simple_ols_df(df, "y", "x").collect()[0]

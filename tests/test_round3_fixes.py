@@ -219,17 +219,15 @@ def test_anchor_logistic_precision(spark):
     """Anchor: logistic precision 0.92 at threshold 0.5 (R_groupe4.R:
     1002-1011; Rapport Fonctionnalité 5 — 570 correct + 9 misclassified in
     the positive row). The precision computation is pinned on a fixed
-    scored frame with exactly 92 TP per 100 predicted positives."""
-    from isen_projet_bigdata_a3s6_spark.ml.pipeline import confusion_matrix
+    scored frame with exactly 92 TP per 100 predicted positives, through
+    the evaluator bundle q80 reads its metrics from."""
+    from isen_projet_bigdata_a3s6_spark.ml.evaluation import classification_metrics
 
     rows = (
         [(1.0, 1.0)] * 92 + [(0.0, 1.0)] * 8       # predicted positive
         + [(0.0, 0.0)] * 570 + [(1.0, 0.0)] * 9    # predicted negative
     )
     scored = spark.createDataFrame(rows, "label double, prediction double")
-    cm = {
-        (r["label"], r["prediction"]): r["n"]
-        for r in confusion_matrix(scored, "label").collect()
-    }
-    tp, fp = cm[(1, 1)], cm[(0, 1)]
-    assert tp / (tp + fp) == pytest.approx(0.92, abs=0)
+    m = classification_metrics(scored, "label").collect()[0]
+    assert m["n"] == 679
+    assert m["precision"] == pytest.approx(0.92, abs=0)

@@ -11,8 +11,8 @@
    r02/r03 q86/q139 failure mode (DuckDB HUGEINT → float64 vs Spark
    BIGINT hash-differ in the driver even when values match).
 5. Golden anchor: logistic precision 0.92 (R_groupe4.R:1002-1011,
-   BASELINE.md row 21) asserted through an actual ``fit_logistic`` fit,
-   not just a fixed scored frame.
+   BASELINE.md row 21) asserted through q44's fixed-round IRLS fit and
+   the confusion matrix of its quantized coefficients.
 """
 
 from __future__ import annotations
@@ -113,25 +113,27 @@ def test_compare_frames_flags_int_float_drift():
 # 5. logistic precision anchor through an actual fit
 # ---------------------------------------------------------------------------
 def test_anchor_logistic_precision_via_fit(spark):
-    """BASELINE.md row 21: precision 0.92 at threshold 0.5. Two-level
+    """BASELINE.md row 21: precision 0.92 at threshold 0.5 (R_groupe4.R:
+    1002-1011; Rapport Fonctionnalité 5), through q44's registered path:
+    the fixed-round IRLS fit and the confusion matrix of its quantized
+    coefficients. Two-level
     design, so the logistic MLE reproduces the empirical class rates
     exactly: P(y=1|x=+2) = 92/100 = 0.92 -> predicted positive,
-    P(y=1|x=-2) = 9/579 -> predicted negative. Precision from the fitted
-    model's confusion matrix is then exactly 92/100."""
-    from isen_projet_bigdata_a3s6_spark.ml.pipeline import confusion_matrix, fit_logistic
+    P(y=1|x=-2) = 9/579 -> predicted negative. Precision is then exactly
+    92/100."""
+    from isen_projet_bigdata_a3s6_spark.ml.irls import logistic_confusion_closed
 
     rows = (
         [(2.0, 1.0)] * 92 + [(2.0, 0.0)] * 8
         + [(-2.0, 0.0)] * 570 + [(-2.0, 1.0)] * 9
     )
     df = spark.createDataFrame(rows, "x double, label double")
-    _, scored = fit_logistic(df, "label", ["x"])
     cm = {
         (r["label"], r["prediction"]): r["n"]
-        for r in confusion_matrix(scored, "label").collect()
+        for r in logistic_confusion_closed(df, "label", ["x"], []).collect()
     }
-    tp, fp = cm.get((1, 1), 0), cm.get((0, 1), 0)
-    assert tp + fp == 100
+    assert cm == {(1, 1): 92, (0, 1): 8, (0, 0): 570, (1, 0): 9}
+    tp, fp = cm[(1, 1)], cm[(0, 1)]
     assert tp / (tp + fp) == pytest.approx(0.92, abs=0)
 
 

@@ -4,18 +4,14 @@
    10^19 stride misordered mixed-sign ids across adjacent timestamps).
 2. fit_logistic survives a non-empty frame whose label/features are all
    NULL (the degenerate-day shape) — mirrors fit_multiple_ols' dropna.
-3. scratch_lease: re-entering a live tag yields a FRESH directory and
-   leaves the leased one untouched.
-4. plans.guard judges each join node on its own build side: a data-sized
+3. plans.guard judges each join node on its own build side: a data-sized
    cartesian is flagged even when the same query computes a global scalar
    elsewhere (the old plan-wide exemption's blind spot).
-5. q187 emits only scalar columns (the r04 driver canonicalizer crash was
-   an array cell) and round-trips exactly against int8 quantization.
+4. q187 emits only scalar columns (the r04 canonicalizer crash was an
+   array cell) and round-trips exactly against int8 quantization.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -66,24 +62,6 @@ def test_fit_logistic_all_null_feature_is_empty_out(spark):
     model, scored = fit_logistic(df, "y", ["x"])
     assert model is None
     assert scored.count() == 0
-
-
-def test_scratch_lease_protects_live_tag(spark):
-    from isen_projet_bigdata_a3s6_spark.scratch import (
-        scratch_dir,
-        scratch_lease,
-    )
-
-    with scratch_lease(spark, "round5_lease") as leased:
-        marker = os.path.join(leased, "live.marker")
-        open(marker, "w").close()
-        other = scratch_dir(spark, "round5_lease")
-        assert other != leased
-        assert os.path.exists(marker), "live dir was wiped by re-entry"
-    # lease released: the next call reclaims (and wipes) the stable path
-    again = scratch_dir(spark, "round5_lease")
-    assert again == leased
-    assert not os.path.exists(marker)
 
 
 def test_guard_flags_cartesian_despite_unrelated_scalar(spark):

@@ -119,30 +119,29 @@ def test_cms_bounds(spark, sf_dir):
     assert violations <= 0.1 * len(exact), (violations, len(exact))
 
 
-def test_bloom_no_false_negatives(spark):
+def _bloom_filter(df, probe, key_col, **params):
+    """``probe`` rows the Bloom filter built from ``df`` might contain."""
     from isen_projet_bigdata_a3s6_spark.operators.sketches import (
-        bloom_build,
-        bloom_might_contain,
+        bloom_literal_predicate,
+        bloom_words,
     )
 
+    bloom = bloom_words(df, key_col, **params)
+    return probe.filter(bloom_literal_predicate(bloom, key_col, **params))
+
+
+def test_bloom_no_false_negatives(spark):
     keys = spark.range(0, 500).select(F.col("id").alias("k"))
-    bloom = bloom_build(keys, "k", num_bits=8192, num_hashes=5)
-    kept = bloom_might_contain(bloom, keys, "k", num_bits=8192, num_hashes=5)
+    kept = _bloom_filter(keys, keys, "k", num_bits=8192, num_hashes=5)
     # Bloom filters never reject an inserted key
     assert kept.count() == 500
 
 
 def test_bloom_false_positive_rate(spark):
-    from isen_projet_bigdata_a3s6_spark.operators.sketches import (
-        bloom_build,
-        bloom_might_contain,
-    )
-
     inserted = spark.range(0, 500).select(F.col("id").alias("k"))
-    bloom = bloom_build(inserted, "k", num_bits=65536, num_hashes=5)
     # 10k keys guaranteed disjoint from the inserted range
     probes = spark.range(1_000_000, 1_010_000).select(F.col("id").alias("k"))
-    fp = bloom_might_contain(bloom, probes, "k", num_bits=65536, num_hashes=5).count()
+    fp = _bloom_filter(inserted, probes, "k", num_bits=65536, num_hashes=5).count()
     # theoretical fp ≈ (1 - e^(-k n / m))^k ≈ 8e-8 at n=500, m=65536, k=5;
     # allow a generous slack over 10k probes
     assert fp <= 20, fp
@@ -150,8 +149,8 @@ def test_bloom_false_positive_rate(spark):
 
 def test_bloom_prune_plus_semi_join_is_exact(spark, sf_dir):
     from isen_projet_bigdata_a3s6_spark.operators.sketches import (
-        bloom_build,
-        bloom_might_contain,
+        bloom_literal_predicate,
+        bloom_words,
     )
     from isen_projet_bigdata_a3s6_spark.sources.readers import load_table
 
@@ -161,8 +160,7 @@ def test_bloom_prune_plus_semi_join_is_exact(spark, sf_dir):
         .filter(F.col("o_totalprice") > 400000)
         .select("o_orderkey")
     )
-    bloom = bloom_build(sel, "o_orderkey")
-    pruned = bloom_might_contain(bloom, li, "l_orderkey")
+    pruned = li.filter(bloom_literal_predicate(bloom_words(sel, "o_orderkey"), "l_orderkey"))
     got = (
         pruned.join(F.broadcast(sel), pruned.l_orderkey == sel.o_orderkey, "left_semi")
         .select("l_orderkey", "l_linenumber")
@@ -176,41 +174,13 @@ def test_bloom_prune_plus_semi_join_is_exact(spark, sf_dir):
 
 
 def test_bloom_build_rejects_bad_params(spark):
-    import pytest as _pytest
-
-    from isen_projet_bigdata_a3s6_spark.operators.sketches import bloom_build
+    from isen_projet_bigdata_a3s6_spark.operators.sketches import bloom_words
 
     keys = spark.range(5).select(F.col("id").alias("k"))
-    with _pytest.raises(ValueError):
-        bloom_build(keys, "k", num_bits=100)
-    with _pytest.raises(ValueError):
-        bloom_build(keys, "k", num_hashes=0)
-
-
-def test_bloom_literal_predicate_matches_join_form(spark):
-    from isen_projet_bigdata_a3s6_spark.operators.sketches import (
-        bloom_build,
-        bloom_literal_predicate,
-        bloom_might_contain,
-    )
-
-    inserted = spark.range(0, 300).select(F.col("id").alias("k"))
-    probes = spark.range(0, 5000).select(F.col("id").alias("k"))
-    bloom = bloom_build(inserted, "k", num_bits=8192, num_hashes=4)
-    via_join = sorted(
-        r["k"]
-        for r in bloom_might_contain(
-            bloom, probes, "k", num_bits=8192, num_hashes=4
-        ).collect()
-    )
-    via_lit = sorted(
-        r["k"]
-        for r in probes.filter(
-            bloom_literal_predicate(bloom, "k", num_bits=8192, num_hashes=4)
-        ).collect()
-    )
-    assert via_join == via_lit
-    assert set(range(300)) <= set(via_lit)  # no false negatives
+    with pytest.raises(ValueError):
+        bloom_words(keys, "k", num_bits=100)
+    with pytest.raises(ValueError):
+        bloom_words(keys, "k", num_hashes=0)
 
 
 def test_histogram_quantile_bound(spark, sf_dir):

@@ -7,7 +7,6 @@ import pytest
 
 from isen_projet_bigdata_a3s6_spark.sources.readers import (
     load_table,
-    read_csv,
     read_parquet_ns_safe,
 )
 from isen_projet_bigdata_a3s6_spark.sources.writers import write_csv
@@ -17,7 +16,7 @@ def test_csv_roundtrip(spark, tmp_path):
     df = spark.createDataFrame([(1, "x"), (2, "y")], "id int, s string")
     out = str(tmp_path / "csv_out")
     write_csv(df, out, single_file=True)
-    back = read_csv(spark, out, schema=None, header=True)
+    back = spark.read.schema(df.schema).option("header", "true").csv(out)
     assert sorted(map(tuple, back.collect())) == [(1, "x"), (2, "y")]
 
 
@@ -79,26 +78,6 @@ def test_clustered_layout_prunes_and_sorts(spark, sf_dir, tmp_path):
         per_file.setdefault(r["f"], []).append(r["ts"])
     assert per_file and all(v == sorted(v) for v in per_file.values())
     assert week.count() == e.filter(F.col("dt") == "2024-01-05").count()
-
-
-def test_partitioned_write_and_pruning(spark, sf_dir, tmp_path):
-    """Partitioned parquet + partition pruning: the scan of a filtered read
-    must only touch the matching partition directories."""
-    from pyspark.sql import functions as F
-
-    from isen_projet_bigdata_a3s6_spark.sources.writers import write_parquet
-
-    e = load_table(spark, sf_dir, "events").withColumn(
-        "dt", F.to_date("ts")
-    )
-    out = str(tmp_path / "events_part")
-    write_parquet(e, out, partition_by=["dt"])
-    back = spark.read.parquet(out)
-    one_day = back.filter(F.col("dt") == "2024-01-05")
-    plan = one_day._jdf.queryExecution().executedPlan().toString()
-    # partition filter must appear as a partition filter, not a data filter
-    assert "PartitionFilters" in plan
-    assert one_day.count() == e.filter(F.col("dt") == "2024-01-05").count()
 
 
 def test_zorder_key_interleave(spark):

@@ -3,10 +3,7 @@ fixtures pin semantics; q86-q89 add oracle parity at sf0.01."""
 
 import math
 
-from isen_projet_bigdata_a3s6_spark.operators.sampling import (
-    stratified_hash_sample,
-    stratified_mod_sample,
-)
+from isen_projet_bigdata_a3s6_spark.operators.sampling import stratified_mod_sample
 from isen_projet_bigdata_a3s6_spark.operators.textstats import (
     ngram_contamination,
     repetition_stats,
@@ -85,30 +82,6 @@ def test_mod_sample_rates_and_stability(spark):
         ).collect()
     )
     assert ids1 == ids2
-
-
-def test_hash_sample_rates_and_stability(spark):
-    e = _events(spark)
-    frac = {"a": 0.3, "b": 0.7}
-    out = stratified_hash_sample(e, ["id"], "typ", frac, default_frac=0.0, seed=7)
-    by_typ = {r["typ"]: r["n"] for r in out.groupBy("typ").count().withColumnRenamed("count", "n").collect()}
-    assert abs(by_typ["a"] / 667 - 0.3) < 0.07
-    assert abs(by_typ["b"] / 667 - 0.7) < 0.07
-    assert "c" not in by_typ                        # default_frac=0 drops stratum
-    ids1 = sorted(r["id"] for r in out.collect())
-    ids2 = sorted(
-        r["id"]
-        for r in stratified_hash_sample(
-            e.repartition(13), ["id"], "typ", frac, default_frac=0.0, seed=7
-        ).collect()
-    )
-    assert ids1 == ids2
-    # a different seed draws a different sample
-    ids3 = sorted(
-        r["id"]
-        for r in stratified_hash_sample(e, ["id"], "typ", frac, 0.0, seed=8).collect()
-    )
-    assert ids1 != ids3
 
 
 def test_runlength_udtf_semantics(spark):
